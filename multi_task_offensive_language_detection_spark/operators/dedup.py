@@ -1,16 +1,18 @@
 """Deduplication suite for large-scale training-data curation.
 
-All variants are Spark-native (no Python in the hot path except SimHash's
-bit-packing, which is a vectorized pandas UDF):
+All variants are Spark-native except for two vectorized pandas UDFs:
+MinHash's features pass and SimHash's bit-packing:
 
 - exact:        hash-groupBy keep-min-key (deterministic, unlike
                 dropDuplicates' arbitrary row pick)
 - window:       row_number over xxhash64(text) — the W1 scale form
 - n-gram Jaccard: char-shingle arrays + array_intersect/union — exact
                 near-dup scoring for candidate pairs
-- MinHash+LSH:  shingle → k minhashes (xxhash64 with k seeds, computed
-                inside native higher-order functions) → banded bucket
-                join → candidate pairs → exact-Jaccard verify.
+- MinHash+LSH:  one Arrow pass per document (vectorized numpy) turns
+                its char n-shingles into 64 minhashes, hashes them into
+                8 band buckets (Spark-exact XXH64) and emits the distinct
+                shingle hashes → banded bucket grouping → candidate
+                pairs → exact-Jaccard verify as JVM set ops.
                 Shuffle cost: one explode + one groupBy on (band, hash);
                 shingle-less texts are excluded and degenerate buckets
                 capped (with stats accounting), so candidate volume is
@@ -128,38 +130,13 @@ def ngram_jaccard_pairs(
     )
 
 
-# --- MinHash + LSH (native, scale path) ---------------------------------------
+# --- MinHash + LSH (Arrow band kernel, scale path) ------------------------------
 
-
-def _seeded_hasher(j: int):
-    # single-arg lambda on purpose: a 2-arg lambda would be interpreted by
-    # F.transform as the (element, index) form and j would silently bind
-    # to the element index instead of the slot seed
-    return lambda e: F.xxhash64(F.lit(j), e)
-
-
-def minhash_signature(hashed_shingles: Column, num_hashes: int = 32) -> Column:
-    """array<bigint> of ``num_hashes`` minhashes from PRE-HASHED shingles
-    (array<bigint>) — zero Python.
-
-    Higher-order functions are interpreted (no codegen), so hashing the
-    shingle STRINGS num_hashes times would dominate. Callers hash the
-    strings once into a materialized column (see minhash_lsh_pairs) and
-    the hash family here just re-hashes 8-byte longs with per-slot seeds
-    (seeded xxhash64 over a base hash is a perfectly good universal
-    family) — ~10× less work for the same LSH guarantees."""
-    return F.array(
-        *[
-            F.array_min(F.transform(hashed_shingles, _seeded_hasher(j)))
-            for j in range(num_hashes)
-        ]
-    )
-
-
-def hashed_shingles(shingles: Column) -> Column:
-    """One string-hash pass: array<string> → array<bigint>."""
-    return F.transform(shingles, lambda s: F.xxhash64(s))
-
+#: MinHash signature width and its banding: LSH_BANDS bands of LSH_ROWS
+#: slots each. 8 x 8 puts the banding S-curve's midpoint near Jaccard 0.77.
+MINHASH_SLOTS = 64
+LSH_BANDS = 8
+LSH_ROWS = MINHASH_SLOTS // LSH_BANDS
 
 #: multiplicative-xor family constants for the batched signature
 _MINHASH_A = 0x9E3779B97F4A7C15
@@ -171,7 +148,7 @@ def _flat_shingle_hashes(texts: pd.Series, n: int):
     for a text batch — all numpy. Shingle STRINGS never cross Arrow
     (300 small strings/row of serde vs one rolling hash); the compact
     int64 HASH arrays do cross once per document in
-    minhash64_features_udf, which is what lets verify run JVM-side
+    minhash64_band_features_udf, which is what lets verify run JVM-side
     instead of re-shingling texts per candidate pair."""
     from ..functions.hashing import char_ngram_hashes_flat
 
@@ -180,7 +157,7 @@ def _flat_shingle_hashes(texts: pd.Series, n: int):
     if len(h) == 0:
         # keep the (hashes, rows, nrows) contract: the row count goes in
         # the THIRD slot (an all-short/empty batch otherwise fed the empty
-        # rows ndarray to np.full((nrows, 64), ...) in the callers)
+        # rows ndarray to np.full((nrows, 64), ...) in _minhash64)
         return h, rows, len(tl)
     # distinct shingles per row: lexsort by (row, hash), drop adjacent dups
     order = np.lexsort((h, rows))
@@ -189,93 +166,24 @@ def _flat_shingle_hashes(texts: pd.Series, n: int):
     return h[keep], rows[keep], len(tl)
 
 
-def minhash64_text_udf(n: int = 5):
-    """text → 64-slot MinHash signature, fully vectorized per Arrow batch
-    (shingling + hashing + per-slot segment-min all in numpy).
-
-    Works on the RAW (non-deduped) shingle-hash stream — the min of a
-    multiset equals the min of its distinct values. No longer on the hot
-    path (the LSH base computes sig + sh together in
-    minhash64_features_udf, whose signature comes from the DEDUPED
-    stream); kept as the independent reference kernel pinning that the
-    dedup changes nothing about signatures
-    (tests/test_dedup_similarity.py cross-kernel equivalence)."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from ..functions.hashing import char_ngram_hashes_flat
-
-        for s in it:
-            tl = [str(t) for t in s.fillna("")]
-            h, rows = char_ngram_hashes_flat(tl, n)
-            out = np.full((len(s), 64), np.iinfo(np.int64).max, dtype=np.int64)
-            if len(h):
-                counts = np.bincount(rows, minlength=len(tl))
-                bounds_all = np.concatenate(([0], np.cumsum(counts)))[:-1]
-                nonempty = np.nonzero(counts > 0)[0]
-                bounds = bounds_all[nonempty]
-                with np.errstate(over="ignore"):
-                    for j in range(64):
-                        mixed = (
-                            h * np.uint64((_MINHASH_A * (2 * j + 1)) & _MINHASH_MASK)
-                        ) ^ np.uint64((j * 0xC2B2AE3D27D4EB4F) & _MINHASH_MASK)
-                        out[nonempty, j] = np.minimum.reduceat(
-                            mixed.view(np.int64), bounds
-                        )
-            yield pd.Series(list(out))
-
-    return _sig
-
-
-LSH_FEATURES = T.StructType(
-    [
-        T.StructField("sig", T.ArrayType(T.LongType())),
-        T.StructField("sh", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def minhash64_features_udf(n: int = 5):
-    """text → struct<sig: 64-slot MinHash signature, sh: per-row DISTINCT
-    sorted shingle hashes> in ONE Arrow pass (iterator pandas UDFs are
-    never fused by Catalyst, so emitting both from one UDF is what keeps
-    the LSH base a single Python stage).
-
-    The signature is computed FROM the deduped stream — the min of a
-    multiset equals the min of its distinct values, so dedup changes
-    nothing about the signature — and the lexsort the distinct arrays
-    need is thereby shared with them. Emitting ``sh`` (int64 view of the
-    rolling hashes) is what lets the VERIFY step run entirely JVM-side
-    (array_intersect/array_union set ops): each document is shingled
-    exactly ONCE here instead of once per candidate pair in a Python
-    re-shingle kernel — measured 4-6× faster verify at sf0.1 (118k
-    candidate pairs: 3.0-5.2s Arrow text-verify vs 0.77s JVM set ops),
-    and the asymptotic win grows with candidate fan-out at 100 TB."""
-
-    @F.pandas_udf(LSH_FEATURES)
-    def _feat(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for s in it:
-            h, rows, nrows = _flat_shingle_hashes(s, n)
-            sig = np.full((nrows, 64), np.iinfo(np.int64).max, dtype=np.int64)
-            if len(h):
-                counts = np.bincount(rows, minlength=nrows)
-                bounds_all = np.concatenate(([0], np.cumsum(counts)))[:-1]
-                nonempty = np.nonzero(counts > 0)[0]
-                bounds = bounds_all[nonempty]
-                with np.errstate(over="ignore"):
-                    for j in range(64):
-                        mixed = (
-                            h * np.uint64((_MINHASH_A * (2 * j + 1)) & _MINHASH_MASK)
-                        ) ^ np.uint64((j * 0xC2B2AE3D27D4EB4F) & _MINHASH_MASK)
-                        sig[nonempty, j] = np.minimum.reduceat(
-                            mixed.view(np.int64), bounds
-                        )
-                sh_list = np.split(h.view(np.int64), np.cumsum(counts)[:-1])
-            else:
-                sh_list = [np.empty(0, dtype=np.int64)] * nrows
-            yield pd.DataFrame({"sig": list(sig), "sh": sh_list})
-
-    return _feat
+def _minhash64(h: np.ndarray, rows: np.ndarray, nrows: int) -> np.ndarray:
+    """(nrows, 64) int64 MinHash signatures of row-grouped uint64 shingle
+    hashes: slot j is the per-row segment min of family member j,
+    ``(h * A_j) ^ B_j``. Rows without shingles keep the int64-max
+    sentinel in every slot."""
+    sig = np.full((nrows, MINHASH_SLOTS), np.iinfo(np.int64).max, dtype=np.int64)
+    if len(h):
+        counts = np.bincount(rows, minlength=nrows)
+        bounds_all = np.concatenate(([0], np.cumsum(counts)))[:-1]
+        nonempty = np.nonzero(counts > 0)[0]
+        bounds = bounds_all[nonempty]
+        with np.errstate(over="ignore"):
+            for j in range(MINHASH_SLOTS):
+                mixed = (
+                    h * np.uint64((_MINHASH_A * (2 * j + 1)) & _MINHASH_MASK)
+                ) ^ np.uint64((j * 0xC2B2AE3D27D4EB4F) & _MINHASH_MASK)
+                sig[nonempty, j] = np.minimum.reduceat(mixed.view(np.int64), bounds)
+    return sig
 
 
 LSH_BAND_FEATURES = T.StructType(
@@ -286,25 +194,23 @@ LSH_BAND_FEATURES = T.StructType(
 )
 
 
-def minhash64_band_features_udf(n: int = 5, bands: int = 8):
-    """text → struct<bhs: per-band bucket hashes, sh: DISTINCT shingle
-    hashes (unsigned-64 sort order, int64 view)> in ONE Arrow pass.
+def minhash64_band_features_udf(n: int = 5):
+    """text → struct<bhs: LSH_BANDS per-band bucket hashes, sh: DISTINCT
+    shingle hashes (unsigned-64 sort order, int64 view)> in ONE Arrow
+    pass (iterator pandas UDFs are never fused by Catalyst, so emitting
+    both from one UDF keeps the LSH base a single Python stage).
 
-    r7: the 64-slot signature never leaves Python. Its ONLY consumer was
-    the JVM banding expression ``xxhash64(sig[b*r], ..., sig[b*r+r-1])``
-    — an 8-struct array explode whose whole-stage codegen compiled to two
-    ~81 KB Janino classes (one per consumer pipeline of the banded rows)
-    and dominated the query's first-run wall (~22 s of compile at sf0.1,
-    measured codegen-on vs codegen-off). Computing the band hashes here
-    with the vectorized Spark-exact XXH64 chain
-    (functions.hashing.xxhash64_longs, pinned bit-equal to F.xxhash64)
-    emits 8 longs/row instead of 64, shrinks the persisted frame and the
-    banding explode to a trivial posexplode, and keeps every downstream
-    (band, bh) value BIT-IDENTICAL to the former JVM expression —
-    pinned by tests/test_dedup_similarity.py banded-rows equality."""
-    if 64 % bands:
-        raise ValueError(f"bands={bands} must divide 64")
-    rows_per_band = 64 // bands
+    The 64-slot signature (_minhash64, computed from the deduped stream —
+    the min of a multiset equals the min of its distinct values) never
+    leaves Python: band b's bucket hash is the vectorized Spark-exact
+    XXH64 chain (functions.hashing.xxhash64_longs, pinned bit-equal to
+    F.xxhash64) over slots b*8 .. b*8+7, i.e. the value the JVM
+    expression ``xxhash64(sig[b*8], ..., sig[b*8+7])`` gives. Hashing
+    here instead of in a JVM banding explode avoids two ~81 KB Janino
+    classes (~22 s of first-run compile at sf0.1) and sends 8 longs/row
+    back over Arrow instead of 64. Emitting ``sh`` lets the verify step
+    run entirely JVM-side (array_intersect set ops): each document is
+    shingled once here instead of once per candidate pair."""
 
     @F.pandas_udf(LSH_BAND_FEATURES)
     def _feat(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
@@ -312,28 +218,16 @@ def minhash64_band_features_udf(n: int = 5, bands: int = 8):
 
         for s in it:
             h, rows, nrows = _flat_shingle_hashes(s, n)
-            sig = np.full((nrows, 64), np.iinfo(np.int64).max, dtype=np.int64)
+            sig_u = _minhash64(h, rows, nrows).view(np.uint64)
             if len(h):
                 counts = np.bincount(rows, minlength=nrows)
-                bounds_all = np.concatenate(([0], np.cumsum(counts)))[:-1]
-                nonempty = np.nonzero(counts > 0)[0]
-                bounds = bounds_all[nonempty]
-                with np.errstate(over="ignore"):
-                    for j in range(64):
-                        mixed = (
-                            h * np.uint64((_MINHASH_A * (2 * j + 1)) & _MINHASH_MASK)
-                        ) ^ np.uint64((j * 0xC2B2AE3D27D4EB4F) & _MINHASH_MASK)
-                        sig[nonempty, j] = np.minimum.reduceat(
-                            mixed.view(np.int64), bounds
-                        )
                 sh_list = np.split(h.view(np.int64), np.cumsum(counts)[:-1])
             else:
                 sh_list = [np.empty(0, dtype=np.int64)] * nrows
-            sig_u = sig.view(np.uint64)
-            bhs = np.empty((nrows, bands), dtype=np.int64)
-            for b in range(bands):
+            bhs = np.empty((nrows, LSH_BANDS), dtype=np.int64)
+            for b in range(LSH_BANDS):
                 bhs[:, b] = xxhash64_longs(
-                    [sig_u[:, b * rows_per_band + r] for r in range(rows_per_band)]
+                    [sig_u[:, b * LSH_ROWS + r] for r in range(LSH_ROWS)]
                 ).view(np.int64)
             yield pd.DataFrame({"bhs": list(bhs), "sh": sh_list})
 
@@ -344,78 +238,53 @@ def sh_jaccard(sh1: Column, sh2: Column) -> Column:
     """Exact distinct-shingle Jaccard of two precomputed hash arrays,
     pure JVM (array_intersect is a hash-set membership pass — O(n+m),
     whole-stage-codegen, no Python worker in the verify path). int/int
-    division promotes to double, bit-identical to the numpy kernel's
-    float64 division of the same exact integers (pinned by
-    tests/test_dedup_similarity.py cross-kernel equivalence)."""
+    division promotes to double, bit-identical to a numpy float64
+    division of the same exact integers (pinned against an independent
+    re-shingling reference kernel in tests/)."""
     inter = F.size(F.array_intersect(sh1, sh2))
     union = F.size(sh1) + F.size(sh2) - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def jaccard_texts_udf(n: int = 5):
-    """(text1, text2) → exact distinct-shingle Jaccard, numpy per batch —
-    the INDEPENDENT reference kernel for the JVM set-op verify
-    (sh_jaccard): re-shingles both sides from raw text, sharing nothing
-    with the array path, so the cross-kernel equivalence test pins the
-    whole features→set-ops chain. No longer on the hot path — verify
-    joins precomputed ``sh`` arrays instead of re-shingling each text
-    once per candidate pair.
-
-    Fully vectorized: both sides' per-row-distinct shingle hashes are
-    concatenated as (row, hash) pairs and lexsorted once — a (row, hash)
-    appearing twice means both sides contain it, so the per-row
-    intersection is one bincount over adjacent-duplicate positions. No
-    per-row Python loop (the old row-loop at ~0.5 ms/pair dominated the
-    whole LSH job once candidates landed on few tasks)."""
-
-    @F.pandas_udf(T.DoubleType())
-    def _j(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for a, b in it:
-            ha, ra, _ = _flat_shingle_hashes(a, n)
-            hb, rb, _ = _flat_shingle_hashes(b, n)
-            ca = np.bincount(ra, minlength=len(a))
-            cb = np.bincount(rb, minlength=len(a))
-            rows = np.concatenate([ra, rb])
-            hs = np.concatenate([ha, hb])
-            order = np.lexsort((hs, rows))
-            rs, hh = rows[order], hs[order]
-            dup = (rs[1:] == rs[:-1]) & (hh[1:] == hh[:-1])
-            inter = np.bincount(rs[1:][dup], minlength=len(a))
-            union = ca + cb - inter
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out = np.where(union > 0, inter / np.maximum(union, 1), 0.0)
-            yield pd.Series(out)
-
-    return _j
+def _check_lsh_params(
+    n: int, verify_threshold: float = 0.5, max_bucket_size: int | None = None
+) -> None:
+    """ValueError for LSH parameters that cannot give a meaningful pair
+    set: no shingles (n < 1), a threshold no Jaccard can or every pair
+    will pass, or a bucket cap that drops every bucket with a pair."""
+    if n < 1:
+        raise ValueError(f"n={n}: shingle size must be >= 1")
+    if not 0 < verify_threshold <= 1:
+        raise ValueError(f"verify_threshold={verify_threshold} must be in (0, 1]")
+    if max_bucket_size is not None and max_bucket_size < 2:
+        raise ValueError(f"max_bucket_size={max_bucket_size} must be None or >= 2")
 
 
 def _underpartitioned(df: DataFrame) -> bool:
     """True when the frame's scan has fewer input files than cores.
 
     Partitioning is a pure performance decision here (the pair set is
-    partition-invariant), so a cheap proxy beats the exact probe: r7
-    replaced ``df.rdd.getNumPartitions()`` — which builds the full
-    physical plan + RDD DAG on the driver, ~0.1 s per fresh DataFrame —
-    with ``inputFiles()`` (a cached file listing, ~ms). Each input file
-    yields at least one scan partition, so n_files ≥ cores means the UDF
-    stage is already spread; the rare huge-files-few-of-them layout
-    takes one unnecessary keyed shuffle, which is the safe direction."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        return len(df.inputFiles()) < target
-    except Exception:  # non-file source — fall back to the exact probe
-        return df.rdd.getNumPartitions() < target
+    partition-invariant), so a cheap proxy beats the exact probe:
+    ``inputFiles()`` is a cached file listing (~ms), where
+    ``df.rdd.getNumPartitions()`` builds the full physical plan + RDD DAG
+    on the driver (~0.1 s per fresh DataFrame). Each input file yields at
+    least one scan partition, so n_files ≥ cores means the UDF stage is
+    already spread; the rare huge-files-few-of-them layout takes one
+    unnecessary keyed shuffle, which is the safe direction. Non-file
+    sources (in-memory frames) list no input files, so they always take
+    the keyed shuffle."""
+    return len(df.inputFiles()) < df.sparkSession.sparkContext.defaultParallelism
 
 
-def _lsh_base(df: DataFrame, key_col: str, text_col: str, n: int, num_hashes: int) -> DataFrame:
-    """(k, t, sig, sh) projection for the LSH path — signature for the
-    banding, distinct shingle-hash array for the JVM verify (each doc is
-    shingled ONCE; the verify join never re-shingles). Texts with no
-    n-shingles are excluded here — see minhash_lsh_pairs docstring."""
+def _lsh_base(df: DataFrame, key_col: str, text_col: str, n: int) -> DataFrame:
+    """(k, t, bhs, sh) projection for the LSH path: per-band bucket hashes
+    + distinct shingle-hash array from one Arrow pass (see
+    minhash64_band_features_udf). Texts with no n-shingles are excluded
+    here — see minhash_lsh_pairs docstring."""
     base = df.select(F.col(key_col).alias("k"), F.col(text_col).alias("t")).filter(
-        F.length(F.col("t")) >= F.lit(n)
+        F.length(F.col(text_col)) >= F.lit(n)
     )
-    # The signature UDF is the compute-heavy stage: spread it over every
+    # The features UDF is the compute-heavy stage: spread it over every
     # core when the source arrives under-partitioned (one small parquet
     # file = one task would serialize the whole corpus through a single
     # Python worker). Keyed repartition, so the shuffle is deterministic;
@@ -424,69 +293,12 @@ def _lsh_base(df: DataFrame, key_col: str, text_col: str, n: int, num_hashes: in
         base = base.repartition(
             df.sparkSession.sparkContext.defaultParallelism, F.col("k")
         )
-    if num_hashes == 64:
-        # vectorized numpy shingle+signature+distinct-hash array, ONE
-        # Arrow stage: only raw texts cross into Python, sig + sh come
-        # back (field projection of one UDF struct — no re-evaluation)
-        feat = base.withColumn("_feat", minhash64_features_udf(n)(F.col("t")))
-        return feat.select(
-            "k",
-            "t",
-            F.col("_feat.sig").alias("sig"),
-            F.col("_feat.sh").alias("sh"),
-        )
-    # generic-width path: JVM shingles; sh lives in the xxhash64 space
-    # here (vs the rolling-hash space of the 64 path) — Jaccard over
-    # distinct hashes is hash-space-invariant up to negligible collisions
-    return (
-        base.withColumn("shst", char_shingles(F.col("t"), n))
-        .withColumn("hs", hashed_shingles(F.col("shst")))
-        .withColumn("sig", minhash_signature(F.col("hs"), num_hashes))
-        .withColumn("sh", F.array_distinct(F.col("hs")))
-        .drop("hs", "shst")
-    )
-
-
-def _lsh_base_banded(
-    df: DataFrame, key_col: str, text_col: str, n: int, num_hashes: int, bands: int
-) -> DataFrame:
-    """(k, t, bhs, sh) projection for the LSH path: per-band bucket
-    hashes (array<bigint>, ``bands`` entries) + distinct shingle-hash
-    array, the signature itself consumed internally. The 64-hash path
-    computes the band hashes inside the Arrow kernel (see
-    minhash64_band_features_udf — kills the two ~81 KB banding codegen
-    classes and shrinks what crosses Arrow from 64 to ``bands`` longs per
-    row); the generic-width path keeps the JVM expression. (band, bh)
-    values are identical either way."""
-    rows_per_band = num_hashes // bands
-    if num_hashes == 64:
-        base = df.select(F.col(key_col).alias("k"), F.col(text_col).alias("t")).filter(
-            F.length(F.col(text_col)) >= F.lit(n)
-        )
-        if _underpartitioned(base):
-            base = base.repartition(
-                df.sparkSession.sparkContext.defaultParallelism, F.col("k")
-            )
-        feat = base.withColumn("_feat", minhash64_band_features_udf(n, bands)(F.col("t")))
-        return feat.select(
-            "k",
-            "t",
-            F.col("_feat.bhs").alias("bhs"),
-            F.col("_feat.sh").alias("sh"),
-        )
-    sig = _lsh_base(df, key_col, text_col, n, num_hashes)
-    return sig.select(
+    feat = base.withColumn("_feat", minhash64_band_features_udf(n)(F.col("t")))
+    return feat.select(
         "k",
         "t",
-        F.array(
-            *[
-                F.xxhash64(
-                    *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                )
-                for b in range(bands)
-            ]
-        ).alias("bhs"),
-        "sh",
+        F.col("_feat.bhs").alias("bhs"),
+        F.col("_feat.sh").alias("sh"),
     )
 
 
@@ -496,28 +308,15 @@ def _lsh_banded_bhs(base: DataFrame) -> DataFrame:
     return base.select("k", F.posexplode("bhs").alias("band", "bh"))
 
 
-def _drop_oversized_buckets(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
-    """Remove rows whose (keys) group exceeds ``cap`` rows, via
-    count-aggregate → broadcast anti-join. The aggregate is map-side
-    partial (small (keys, count) shuffle); the oversized-group list is
-    tiny by construction, so the anti-join broadcasts and the data rows
-    are never sorted or re-shuffled for the cap itself."""
-    over = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_bsz"))
-        .filter(F.col("_bsz") > cap)
-        .drop("_bsz")
-    )
-    return df.join(F.broadcast(over), keys, "left_anti")
-
-
 def _capped_buckets_one_exchange(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
-    """Same result as ``_drop_oversized_buckets`` but with the bucketed
-    rows shuffled exactly ONCE (guide §2.4: two operations keyed the
-    same way share one exchange): repartition by ``keys`` up front, so
-    the oversized-bucket count-aggregate and every downstream
-    groupBy(keys) consume the SAME exchange (ReusedExchange) instead of
-    each paying its own shuffle of the banded rows. The broadcast
+    """Remove rows whose (keys) group exceeds ``cap`` rows, via
+    count-aggregate → broadcast anti-join (the oversized-group list is
+    tiny by construction), with the bucketed rows shuffled exactly ONCE
+    (guide §2.4: two operations keyed the same way share one exchange):
+    repartition by ``keys`` up front, so the oversized-bucket
+    count-aggregate and every downstream groupBy(keys) consume the SAME
+    exchange (ReusedExchange) instead of each paying its own shuffle of
+    the banded rows. The broadcast
     anti-join preserves the streamed side's partitioning, so a
     following groupBy(keys) plans with no exchange at all.
 
@@ -535,13 +334,14 @@ def _capped_buckets_one_exchange(df: DataFrame, keys: list[str], cap: int) -> Da
     return df.join(F.broadcast(over), keys, "left_anti")
 
 
-#: one live persisted frame per LSH operator (r6 verdict #4): the
-#: operators return LAZY results, so no caller can know when their
-#: internal cache is releasable — but by the time the SAME operator runs
+#: one live persisted frame per LSH operator (r6 verdict #4): each
+#: operator fills its features cache eagerly when called but returns a
+#: LAZY pair frame that keeps reading that cache, so no caller can know
+#: when the cache is releasable — but by the time the SAME operator runs
 #: again in a process, the previous invocation's plan is either consumed
 #: or abandoned. Swapping on entry bounds the cache footprint at one
 #: frame per operator instead of one per call (the r6 leak: three bench
-#: runs stacked three cached copies of (k, sig, sh)).
+#: runs stacked three cached copies of the features frame).
 _ACTIVE_CACHES: dict[str, DataFrame] = {}
 
 
@@ -571,44 +371,21 @@ def _swap_persist(df: DataFrame, slot: str) -> DataFrame:
     return df
 
 
-def _lsh_banded(base: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(k, band, bh) banding explode of a signature frame."""
-    rows_per_band = num_hashes // bands
-    return base.select(
-        "k",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("k", "bb.band", "bb.bh")
-
-
 def minhash_lsh_bucket_stats(
     df: DataFrame,
     key_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 8,
-    max_bucket_size: int = 1000,
+    max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """No-silent-caps accounting for ``minhash_lsh_pairs``: one row with
-    the number of buckets / banded rows / distinct keys that the bucket
-    cap drops, plus the short-text row count excluded from the LSH path.
-    Run with the same parameters as the pairs call and log the result."""
+    the number of buckets and banded rows that the bucket cap drops, the
+    size of the largest dropped bucket, and the short-text row count
+    excluded from the LSH path. Run with the same parameters as the pairs
+    call and log the result."""
+    _check_lsh_params(n, max_bucket_size=max_bucket_size)
     n_short = df.filter(F.length(F.col(text_col)) < F.lit(n)).count()
-    banded = _lsh_banded_bhs(
-        _lsh_base_banded(df, key_col, text_col, n, num_hashes, bands)
-    )
+    banded = _lsh_banded_bhs(_lsh_base(df, key_col, text_col, n))
     # sizes only — never collect keys per bucket: the over-cap buckets are
     # exactly the ones where a per-bucket collect would blow executor memory
     sizes = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("sz"))
@@ -625,16 +402,20 @@ def minhash_lsh_pairs(
     key_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 8,
     verify_threshold: float = 0.5,
-    max_bucket_size: int = 1000,
+    max_bucket_size: int | None = 1000,
 ) -> DataFrame:
-    """Near-dup candidate pairs via banded MinHash LSH, verified with exact
-    shingle Jaccard.
+    """Near-dup candidate pairs via banded MinHash LSH (MINHASH_SLOTS
+    hashes in LSH_BANDS bands of LSH_ROWS), verified with exact shingle
+    Jaccard.
 
-    Plan: narrow minhash projection → explode(bands) [rows ×bands] →
-    bucket cap → groupBy(band, band_hash) collect_set → double explode
+    Not fully lazy: the call runs one Spark job that fills the persisted
+    features cache (k, bhs, sh) before it returns — see _swap_persist;
+    the returned pair frame is lazy and reads that cache.
+
+    Plan: Arrow features stage (band hashes + shingle hashes) →
+    posexplode(bhs) [rows ×LSH_BANDS] →
+    bucket cap → groupBy(band, band_hash) collect_list → double explode
     (k1 < k2) candidate pairs → verify join back to the precomputed
     shingle-hash arrays (JVM set ops, sh_jaccard). Pair
     generation is ONE keyed shuffle: the capped banded rows group into
@@ -663,16 +444,16 @@ def minhash_lsh_pairs(
       for k≈millions is THE failure mode of banded LSH at 100 TB. This
       is a recall cap, not a silent one — ``minhash_lsh_bucket_stats``
       reports the dropped mass with the same parameters."""
-    base = _lsh_base_banded(df, key_col, text_col, n, num_hashes, bands)
+    _check_lsh_params(n, verify_threshold, max_bucket_size)
+    base = _lsh_base(df, key_col, text_col, n)
     # persisted: the banding explode AND the verify join re-read this
     # frame (at table scale: persist to disk / checkpoint the features).
     # The raw text is dropped first — verify runs on the sh arrays, so
     # persisting t would only add bytes to the cache and the verify
-    # joins' build sides. The 64-slot signature is gone too (r7): only
-    # the per-band bucket hashes (bands longs/row) are kept, which is
-    # all banding ever consumed. _swap_persist releases the PREVIOUS
-    # invocation's cache (r6 leak fix): lazy returns mean no caller can
-    # ever release it, so the next call does.
+    # joins' build sides. _swap_persist fills the cache now, eagerly, and
+    # releases the PREVIOUS invocation's cache (r6 leak fix): the lazy
+    # pair frame returned below keeps reading this one, so no caller can
+    # release it, and the next call does.
     base = _swap_persist(base.select("k", "bhs", "sh"), "minhash_lsh_pairs")
 
     banded = _lsh_banded_bhs(base)
@@ -874,8 +655,6 @@ def lsh_index_write(
     text_col: str,
     path: str,
     n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 8,
     mode: str = "overwrite",
 ) -> None:
     """Sign + band a corpus (or an incremental batch: mode='append')
@@ -885,7 +664,8 @@ def lsh_index_write(
     corpus), and PARTIAL per-bucket counts (queries sum them, so
     appends never rewrite old counts — the same additive-ledger idea as
     the pipeline's counters)."""
-    base = _lsh_base_banded(df, key_col, text_col, n, num_hashes, bands).persist()
+    _check_lsh_params(n)
+    base = _lsh_base(df, key_col, text_col, n).persist()
     banded = _lsh_banded_bhs(base)
     banded.write.mode(mode).partitionBy("band").parquet(path + "/banded")
     banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("cnt")).write.mode(
@@ -901,10 +681,8 @@ def lsh_index_query(
     text_col: str,
     path: str,
     n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 8,
     verify_threshold: float = 0.5,
-    max_bucket_size: int = 1000,
+    max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """Near-dup pairs (k_new, k_old, jaccard) between a new batch and
     the indexed corpus — the corpus is never re-signed or re-shingled
@@ -912,15 +690,17 @@ def lsh_index_query(
     matched candidates and runs JVM set ops; no Python, no text
     re-shingling). Returns the same pairs a monolithic run over
     (old ∪ new) would return for new↔old key pairs, including the
-    bucket-cap decision, which uses index counts + batch counts."""
+    bucket-cap decision, which uses index counts + batch counts.
+
+    Like minhash_lsh_pairs, the call eagerly fills the batch's persisted
+    features cache (one Spark job) before it returns the lazy pair
+    frame."""
+    _check_lsh_params(n, verify_threshold, max_bucket_size)
     spark = new_df.sparkSession
     # persist only what downstream re-reads: bhs for the banding explode
-    # + counts, sh for the verify join (t was cached before r7 for no
-    # consumer)
+    # + counts, sh for the verify join
     new_base = _swap_persist(
-        _lsh_base_banded(new_df, key_col, text_col, n, num_hashes, bands).select(
-            "k", "bhs", "sh"
-        ),
+        _lsh_base(new_df, key_col, text_col, n).select("k", "bhs", "sh"),
         "lsh_index_query",
     )
     new_banded = _lsh_banded_bhs(new_base)

@@ -1,0 +1,91 @@
+"""Reference kernels for the MinHash/LSH features pass
+(operators/dedup.py minhash64_band_features_udf). Test-only: each
+recomputes its result from raw text without the production signature,
+banding or verify code, so equality with the production columns pins
+them."""
+
+from __future__ import annotations
+
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from multi_task_offensive_language_detection_spark.operators.dedup import (
+    _MINHASH_A,
+    _MINHASH_MASK,
+    _flat_shingle_hashes,
+)
+
+
+def minhash64_text_udf(n: int = 5):
+    """text → 64-slot MinHash signature, fully vectorized per Arrow batch
+    (shingling + hashing + per-slot segment-min all in numpy).
+
+    Works on the RAW (non-deduped) shingle-hash stream — the min of a
+    multiset equals the min of its distinct values, while the production
+    kernel signs the DEDUPED stream; equality pins that the dedup changes
+    nothing about signatures."""
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def _sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        from multi_task_offensive_language_detection_spark.functions.hashing import (
+            char_ngram_hashes_flat,
+        )
+
+        for s in it:
+            tl = [str(t) for t in s.fillna("")]
+            h, rows = char_ngram_hashes_flat(tl, n)
+            out = np.full((len(s), 64), np.iinfo(np.int64).max, dtype=np.int64)
+            if len(h):
+                counts = np.bincount(rows, minlength=len(tl))
+                bounds_all = np.concatenate(([0], np.cumsum(counts)))[:-1]
+                nonempty = np.nonzero(counts > 0)[0]
+                bounds = bounds_all[nonempty]
+                with np.errstate(over="ignore"):
+                    for j in range(64):
+                        mixed = (
+                            h * np.uint64((_MINHASH_A * (2 * j + 1)) & _MINHASH_MASK)
+                        ) ^ np.uint64((j * 0xC2B2AE3D27D4EB4F) & _MINHASH_MASK)
+                        out[nonempty, j] = np.minimum.reduceat(
+                            mixed.view(np.int64), bounds
+                        )
+            yield pd.Series(list(out))
+
+    return _sig
+
+
+def jaccard_texts_udf(n: int = 5):
+    """(text1, text2) → exact distinct-shingle Jaccard, numpy per batch —
+    the INDEPENDENT reference for the JVM set-op verify (sh_jaccard):
+    re-shingles both sides from raw text and shares only the shingle
+    hashing (_flat_shingle_hashes) with the production kernel, not its
+    sh arrays or set ops, so the cross-kernel equivalence test pins the
+    whole features→set-ops chain.
+
+    Both sides' per-row-distinct shingle hashes are concatenated as
+    (row, hash) pairs and lexsorted once — a (row, hash) appearing twice
+    means both sides contain it, so the per-row intersection is one
+    bincount over adjacent-duplicate positions."""
+
+    @F.pandas_udf(T.DoubleType())
+    def _j(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
+        for a, b in it:
+            ha, ra, _ = _flat_shingle_hashes(a, n)
+            hb, rb, _ = _flat_shingle_hashes(b, n)
+            ca = np.bincount(ra, minlength=len(a))
+            cb = np.bincount(rb, minlength=len(a))
+            rows = np.concatenate([ra, rb])
+            hs = np.concatenate([ha, hb])
+            order = np.lexsort((hs, rows))
+            rs, hh = rows[order], hs[order]
+            dup = (rs[1:] == rs[:-1]) & (hh[1:] == hh[:-1])
+            inter = np.bincount(rs[1:][dup], minlength=len(a))
+            union = ca + cb - inter
+            with np.errstate(divide="ignore", invalid="ignore"):
+                out = np.where(union > 0, inter / np.maximum(union, 1), 0.0)
+            yield pd.Series(out)
+
+    return _j

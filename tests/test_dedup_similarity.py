@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from multi_task_offensive_language_detection_spark.operators import dedup, similarity
+from tests.lsh_reference import jaccard_texts_udf, minhash64_text_udf
 
 
 @pytest.fixture(scope="module")
@@ -44,7 +47,7 @@ def test_minhash_lsh_finds_what_exact_jaccard_finds(docs):
             docs, "doc_id", "text", verify_threshold=0.8
         ).collect()
     }
-    # LSH-then-verify must find every high-Jaccard pair here (32 hashes,
+    # LSH-then-verify must find every high-Jaccard pair here (64 hashes,
     # 8 bands → near-certain recall at j≥0.8) and no false positives
     # survive the exact verify.
     assert approx == exact
@@ -420,43 +423,62 @@ def test_decontaminate_null_text_survives(spark):
     assert [r["doc_id"] for r in out.collect()] == [1]
 
 
-def test_features_udf_matches_reference_kernels(spark):
-    """The r6 verify rework: _lsh_base computes (sig, sh) in ONE Arrow
-    pass and verify runs JVM set ops over sh. Two cross-kernel pins:
-    (a) the features signature equals the independent raw-stream
-    signature kernel (min over a multiset == min over its distinct
-    values, so the shared dedup must not change signatures);
-    (b) sh_jaccard over the precomputed arrays equals the independent
-    numpy re-shingle kernel jaccard_texts_udf for every pair — same
-    doubles, since both divide the same exact integers."""
-    from pyspark.sql import functions as F
-
-    from multi_task_offensive_language_detection_spark.operators import dedup
-
+@pytest.fixture(scope="module")
+def kernel_texts(spark):
+    """Texts for the kernel pins: a near-dup, a one-shingle multiset, a
+    text shorter than n=5 (empty shingle set) and an exact dup."""
     texts = [
         "the people said they would go to the house",
         "the people said they would go to the houses",
         "completely different content over here today",
         "aaaaaaaaaaaaaaa",
-        "tiny",  # shorter than n=5 → empty shingle set
-        "the people said they would go to the house",  # exact dup
+        "tiny",
+        "the people said they would go to the house",
     ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "k long, t string"
-    )
-    feat = df.withColumn("f", dedup.minhash64_features_udf(5)(F.col("t"))).select(
-        "k", "t", F.col("f.sig").alias("sig"), F.col("f.sh").alias("sh")
-    )
-    ref_sig = df.withColumn("rsig", dedup.minhash64_text_udf(5)(F.col("t")))
-    j = feat.join(ref_sig, ["k"])
-    assert j.filter(F.col("sig") != F.col("rsig")).count() == 0
+    return spark.createDataFrame(list(enumerate(texts)), "k long, t string")
 
+
+def test_band_hashes_match_jvm_banding(kernel_texts):
+    """The Arrow kernel's (k, band, bh) rows equal the JVM banding
+    expression xxhash64(sig[b*8], ..., sig[b*8+7]) applied to the
+    independent raw-stream signature kernel. This pins the signature
+    (min over a multiset == min over its distinct values, so the
+    kernel's shingle dedup must not change it) and the numpy XXH64 chain
+    at once: the bucket space, and therefore the candidate pair set, is
+    bit-frozen."""
+    ref = (
+        kernel_texts.filter(F.length("t") >= 5)
+        .withColumn("sig", minhash64_text_udf(5)(F.col("t")))
+        .select(
+            "k",
+            F.posexplode(
+                F.array(
+                    *[
+                        F.xxhash64(*[F.col("sig")[b * 8 + r] for r in range(8)])
+                        for b in range(8)
+                    ]
+                )
+            ).alias("band", "bh"),
+        )
+    )
+    prod = dedup._lsh_banded_bhs(dedup._lsh_base(kernel_texts, "k", "t", 5))
+    assert ref.exceptAll(prod).count() == 0
+    assert prod.exceptAll(ref).count() == 0
+    assert ref.count() == prod.count() == 5 * 8  # 5 length-eligible texts x 8 bands
+
+
+def test_features_udf_matches_reference_kernels(kernel_texts):
+    """sh_jaccard over the band kernel's precomputed sh arrays equals the
+    independent numpy re-shingle kernel jaccard_texts_udf for every
+    pair — same doubles, since both divide the same exact integers."""
+    sh = dedup.minhash64_band_features_udf(5)(F.col("t")).getField("sh")
+    feat = kernel_texts.select("k", "t", sh.alias("sh"))
     a, b = feat.alias("a"), feat.alias("b")
     pairs = a.join(b, F.col("a.k") < F.col("b.k")).select(
         F.col("a.k").alias("k1"),
         F.col("b.k").alias("k2"),
         dedup.sh_jaccard(F.col("a.sh"), F.col("b.sh")).alias("j_arr"),
-        dedup.jaccard_texts_udf(5)(F.col("a.t"), F.col("b.t")).alias("j_txt"),
+        jaccard_texts_udf(5)(F.col("a.t"), F.col("b.t")).alias("j_txt"),
     )
     rows = pairs.collect()
     assert len(rows) == 15
@@ -491,35 +513,25 @@ def test_features_udf_all_short_batch(spark):
     kernel's zero-shingle early return must still report the ROW COUNT in
     the nrows slot — pre-fix it returned the empty row-id ndarray there
     and np.full((nrows, 64), ...) raised TypeError on any such batch
-    (latent via the public kernel; _lsh_base length-filters first)."""
+    (latent via the public kernel; _lsh_base length-filters first). Each
+    row gets an empty sh and 8 copies of the all-sentinel band hash."""
     df = spark.createDataFrame(
         [(0, "tiny"), (1, ""), (2, None), (3, "abc")], "k long, t string"
     )
     rows = (
-        df.withColumn("f", dedup.minhash64_features_udf(5)(F.col("t")))
-        .select("k", F.col("f.sig").alias("sig"), F.col("f.sh").alias("sh"))
+        df.withColumn("f", dedup.minhash64_band_features_udf(5)(F.col("t")))
+        .select("k", F.col("f.bhs").alias("bhs"), F.col("f.sh").alias("sh"))
         .orderBy("k")
         .collect()
     )
     assert len(rows) == 4
     sentinel = np.iinfo(np.int64).max
+    sentinel_bh = spark.range(1).select(
+        F.xxhash64(*[F.lit(sentinel)] * 8).alias("h")
+    ).first()["h"]
     for r in rows:
         assert r["sh"] == []
-        assert len(r["sig"]) == 64 and all(v == sentinel for v in r["sig"])
-
-
-def test_band_hashes_match_jvm_banding(spark, docs):
-    """r7 codegen fix: the Arrow kernel's numpy XXH64 chain must emit the
-    SAME (k, band, bh) rows the former JVM banding expression
-    (explode of xxhash64(sig[b*r], ..., sig[b*r+r-1])) produced — the
-    bucket space, and therefore the candidate pair set, is bit-frozen."""
-    old = dedup._lsh_banded(dedup._lsh_base(docs, "doc_id", "text", 5, 64), 64, 8)
-    new = dedup._lsh_banded_bhs(
-        dedup._lsh_base_banded(docs, "doc_id", "text", 5, 64, 8)
-    )
-    assert old.exceptAll(new).count() == 0
-    assert new.exceptAll(old).count() == 0
-    assert old.count() == new.count() == 6 * 8  # 6 length-eligible docs x 8 bands
+        assert r["bhs"] == [sentinel_bh] * 8
 
 
 def test_xxhash64_longs_matches_spark(spark):
@@ -568,3 +580,40 @@ def test_lsh_persist_is_materialized_eagerly(spark, docs):
     assert cached.storageLevel.useMemory
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     assert any(i.numCachedPartitions() > 0 for i in infos)
+
+
+_LSH_OPS = {
+    "pairs": lambda df, path, **kw: dedup.minhash_lsh_pairs(df, "doc_id", "text", **kw),
+    "stats": lambda df, path, **kw: dedup.minhash_lsh_bucket_stats(df, "doc_id", "text", **kw),
+    "index_write": lambda df, path, **kw: dedup.lsh_index_write(df, "doc_id", "text", path, **kw),
+    "index_query": lambda df, path, **kw: dedup.lsh_index_query(df, "doc_id", "text", path, **kw),
+}
+
+
+@pytest.mark.parametrize(
+    "op, kwargs, match",
+    [
+        (op, {"n": n}, "shingle size")
+        for op in _LSH_OPS
+        for n in (0, -1)
+    ]
+    + [
+        (op, {"verify_threshold": t}, "verify_threshold")
+        for op in ("pairs", "index_query")
+        for t in (0.0, -0.1, 1.5)
+    ]
+    + [
+        (op, {"max_bucket_size": m}, "max_bucket_size")
+        for op in ("pairs", "stats", "index_query")
+        for m in (1, 0)
+    ],
+)
+def test_lsh_api_rejects_bad_parameters(docs, tmp_path, op, kwargs, match):
+    """The public LSH operators refuse parameters that cannot give a
+    meaningful pair set (no shingles, an unreachable or vacuous verify
+    threshold, a cap that drops every bucket holding a pair) up front,
+    before any Spark job runs or any index file is written."""
+    path = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match=match):
+        _LSH_OPS[op](docs, path, **kwargs)
+    assert not os.path.exists(path)
