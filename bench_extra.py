@@ -29,23 +29,7 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-HEADLINE = [
-    "filter_length",
-    "join_then_agg",
-    "win_moving_avg",
-    "agg_rollup",
-    "topk_terms",
-    "dedup_minhash_lsh",
-    "ann_brute_topk",
-    "stream_session",
-    "pipeline_documents",
-]
-
-
-def _median(xs: list[float]) -> float:
-    s = sorted(xs)
-    m = len(s) // 2
-    return s[m] if len(s) % 2 else 0.5 * (s[m - 1] + s[m])
+from bench import HEADLINE, _median  # noqa: E402  (bench.py import is side-effect free)
 
 
 def build_warm_session(cpus: str, sf_dir: str):

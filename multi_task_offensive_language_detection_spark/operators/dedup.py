@@ -12,7 +12,11 @@ MinHash's features pass and SimHash's bit-packing:
                 its char n-shingles into 64 minhashes, hashes them into
                 8 band buckets (Spark-exact XXH64) and emits the distinct
                 shingle hashes → banded bucket grouping → candidate
-                pairs → exact-Jaccard verify as JVM set ops.
+                pairs → exact-Jaccard verify as JVM set ops, one
+                array_intersect per candidate pair (sh_jaccard keeps the
+                threshold filter out of the verify join's condition,
+                where Catalyst would evaluate the intersection twice per
+                candidate and once more per survivor).
                 Shuffle cost: one explode + one groupBy on (band, hash);
                 shingle-less texts are excluded and degenerate buckets
                 capped (with stats accounting), so candidate volume is
@@ -149,21 +153,51 @@ def _flat_shingle_hashes(texts: pd.Series, n: int):
     (300 small strings/row of serde vs one rolling hash); the compact
     int64 HASH arrays do cross once per document in
     minhash64_band_features_udf, which is what lets verify run JVM-side
-    instead of re-shingling texts per candidate pair."""
+    instead of re-shingling texts per candidate pair.
+
+    Dedup sorts each row's hashes in place rather than the whole stream:
+    the rows already arrive grouped, so a global (row, hash) lexsort
+    would spend most of its time re-deriving that order. Rows are padded
+    into one matrix per power-of-two count class, so every matrix holds
+    fewer than twice its rows' elements and one huge text cannot blow
+    the padding up for the rest of the batch. Padding is the uint64 max
+    and sorts last, so each row's first ``count`` sorted slots are
+    exactly its own hashes; a validity mask, not the pad value, marks
+    them (a real hash may equal the pad)."""
     from ..functions.hashing import char_ngram_hashes_flat
 
     tl = [str(t) for t in texts.fillna("")]
     h, rows = char_ngram_hashes_flat(tl, n)
+    nrows = len(tl)
     if len(h) == 0:
         # keep the (hashes, rows, nrows) contract: the row count goes in
         # the THIRD slot (an all-short/empty batch otherwise fed the empty
         # rows ndarray to np.full((nrows, 64), ...) in _minhash64)
-        return h, rows, len(tl)
-    # distinct shingles per row: lexsort by (row, hash), drop adjacent dups
-    order = np.lexsort((h, rows))
-    h, rows = h[order], rows[order]
-    keep = np.concatenate(([True], (h[1:] != h[:-1]) | (rows[1:] != rows[:-1])))
-    return h[keep], rows[keep], len(tl)
+        return h, rows, nrows
+    counts = np.bincount(rows, minlength=nrows)
+    # count class: the exponent of the smallest power of two >= count
+    cls = np.frexp(np.maximum(counts, 1) - 1)[1]
+    elem_cls = cls[rows]
+    distinct = np.zeros(nrows, dtype=np.int64)
+    sorted_cls = []
+    for c in np.unique(cls[counts > 0]):
+        r = np.nonzero((cls == c) & (counts > 0))[0]
+        valid = np.arange(1 << int(c)) < counts[r][:, None]
+        m = np.full(valid.shape, np.iinfo(np.uint64).max, dtype=np.uint64)
+        m[valid] = h[elem_cls == c]  # row-major order == stream order
+        m.sort(axis=1)
+        valid[:, 1:] &= m[:, 1:] != m[:, :-1]
+        distinct[r] = valid.sum(axis=1)
+        sorted_cls.append((r, m[valid]))
+    ends = np.cumsum(distinct)
+    out = np.empty(int(ends[-1]), dtype=np.uint64)
+    for r, vals in sorted_cls:
+        nd = distinct[r]
+        # ``vals`` holds the class's rows back to back: shift each row's
+        # run from its start there (cumsum(nd) - nd) to its start in
+        # ``out`` (ends[r] - nd)
+        out[np.repeat(ends[r] - np.cumsum(nd), nd) + np.arange(len(vals))] = vals
+    return out, np.repeat(np.arange(nrows, dtype=rows.dtype), distinct), nrows
 
 
 def _minhash64(h: np.ndarray, rows: np.ndarray, nrows: int) -> np.ndarray:
@@ -234,16 +268,30 @@ def minhash64_band_features_udf(n: int = 5):
     return _feat
 
 
-def sh_jaccard(sh1: Column, sh2: Column) -> Column:
-    """Exact distinct-shingle Jaccard of two precomputed hash arrays,
-    pure JVM (array_intersect is a hash-set membership pass — O(n+m),
+def sh_jaccard(pairs: DataFrame, sh1: str, sh2: str) -> DataFrame:
+    """``pairs`` with its two precomputed distinct shingle-hash array
+    columns replaced by their exact Jaccard, ``jaccard``, pure JVM
+    (array_intersect is a hash-set membership pass — O(n+m),
     whole-stage-codegen, no Python worker in the verify path). int/int
     division promotes to double, bit-identical to a numpy float64
     division of the same exact integers (pinned against an independent
-    re-shingling reference kernel in tests/)."""
-    inter = F.size(F.array_intersect(sh1, sh2))
+    re-shingling reference kernel in tests/).
+
+    The intersection size is computed ONCE per pair, as the one element
+    of ``explode(array(...))``. Written as a plain column, a later
+    ``filter(jaccard >= t)`` is pushed by Catalyst through the
+    projection into the verify join's condition with the expression
+    inlined, so every candidate pays the intersection twice there (the
+    union repeats it) and every survivor a third time in the projection.
+    A Generate output cannot be pushed below its Generate, so the filter
+    stays above it and reads the one computed value."""
+    inter = F.col("_inter")
     union = F.size(sh1) + F.size(sh2) - inter
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    rest = [c for c in pairs.columns if c not in (sh1, sh2)]
+    return pairs.select(
+        *pairs.columns,
+        F.explode(F.array(F.size(F.array_intersect(sh1, sh2)))).alias("_inter"),
+    ).select(*rest, F.when(union > 0, inter / union).otherwise(F.lit(0.0)).alias("jaccard"))
 
 
 def _check_lsh_params(
@@ -417,7 +465,9 @@ def minhash_lsh_pairs(
     posexplode(bhs) [rows ×LSH_BANDS] →
     bucket cap → groupBy(band, band_hash) collect_list → double explode
     (k1 < k2) candidate pairs → verify join back to the precomputed
-    shingle-hash arrays (JVM set ops, sh_jaccard). Pair
+    shingle-hash arrays → sh_jaccard (one array_intersect per pair; its
+    Generate keeps the threshold filter out of the join condition) →
+    threshold filter. Pair
     generation is ONE keyed shuffle: the capped banded rows group into
     ≤``max_bucket_size``-element key arrays (bounded: ≤8 KB per bucket
     by construction — with ``max_bucket_size=None`` the grouped path is
@@ -520,19 +570,21 @@ def minhash_lsh_pairs(
     # relation on the driver at sf1.0 — and an impossible one at table
     # scale. A per-partition hash build after a keyed shuffle costs
     # nothing extra and is scale-invariant (r7 A/B: the broadcast plan's
-    # first run was 26.6s vs 10.1s shuffled, equal results).
+    # first run was 26.6s vs 10.1s shuffled, equal results). The
+    # threshold filter must not reach the join condition: there the
+    # inlined Jaccard intersects each candidate's arrays twice (and the
+    # projection once more per survivor); sh_jaccard computes the
+    # intersection once, behind a Generate the filter cannot cross.
     shs = base.select(F.col("k"), F.col("sh"))
-    return (
-        cand.join(
-            shs.withColumnsRenamed({"k": "k1", "sh": "sh1"}).hint("shuffle_hash"),
-            "k1",
-        )
-        .join(
-            shs.withColumnsRenamed({"k": "k2", "sh": "sh2"}).hint("shuffle_hash"),
-            "k2",
-        )
-        .select("k1", "k2", sh_jaccard(F.col("sh1"), F.col("sh2")).alias("jaccard"))
-        .filter(F.col("jaccard") >= verify_threshold)
+    joined = cand.join(
+        shs.withColumnsRenamed({"k": "k1", "sh": "sh1"}).hint("shuffle_hash"),
+        "k1",
+    ).join(
+        shs.withColumnsRenamed({"k": "k2", "sh": "sh2"}).hint("shuffle_hash"),
+        "k2",
+    )
+    return sh_jaccard(joined.select("k1", "k2", "sh1", "sh2"), "sh1", "sh2").filter(
+        F.col("jaccard") >= verify_threshold
     )
 
 
@@ -742,17 +794,14 @@ def lsh_index_query(
     new_sh = new_base.select(F.col("k").alias("k_new"), F.col("sh").alias("sh_new"))
     # shuffle_hash on the sh sides, same rationale as minhash_lsh_pairs:
     # small row counts but the whole shingle-hash mass as payload —
-    # never driver-broadcast the corpus features
-    return (
-        cand.join(new_sh.hint("shuffle_hash"), "k_new")
-        .join(old_sh.hint("shuffle_hash"), "k_old")
-        .select(
-            "k_new",
-            "k_old",
-            sh_jaccard(F.col("sh_new"), F.col("sh_old")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= verify_threshold)
+    # never driver-broadcast the corpus features; sh_jaccard keeps the
+    # threshold filter out of the join condition, as there
+    joined = cand.join(new_sh.hint("shuffle_hash"), "k_new").join(
+        old_sh.hint("shuffle_hash"), "k_old"
     )
+    return sh_jaccard(
+        joined.select("k_new", "k_old", "sh_new", "sh_old"), "sh_new", "sh_old"
+    ).filter(F.col("jaccard") >= verify_threshold)
 
 
 # --- SimHash -------------------------------------------------------------------

@@ -13,11 +13,28 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from multi_task_offensive_language_detection_spark.functions.hashing import (
+    char_ngram_hashes_flat,
+)
 from multi_task_offensive_language_detection_spark.operators.dedup import (
     _MINHASH_A,
     _MINHASH_MASK,
-    _flat_shingle_hashes,
 )
+
+
+def flat_shingle_hashes_lexsort(texts: pd.Series, n: int):
+    """(unique-shingle uint64 hashes sorted by row, row ids, row count)
+    — the production _flat_shingle_hashes contract, deduped by ONE
+    global lexsort of the (row, hash) stream and an adjacent-duplicate
+    drop instead of production's per-row padded sort."""
+    tl = [str(t) for t in texts.fillna("")]
+    h, rows = char_ngram_hashes_flat(tl, n)
+    if len(h) == 0:
+        return h, rows, len(tl)
+    order = np.lexsort((h, rows))
+    h, rows = h[order], rows[order]
+    keep = np.concatenate(([True], (h[1:] != h[:-1]) | (rows[1:] != rows[:-1])))
+    return h[keep], rows[keep], len(tl)
 
 
 def minhash64_text_udf(n: int = 5):
@@ -31,10 +48,6 @@ def minhash64_text_udf(n: int = 5):
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from multi_task_offensive_language_detection_spark.functions.hashing import (
-            char_ngram_hashes_flat,
-        )
-
         for s in it:
             tl = [str(t) for t in s.fillna("")]
             h, rows = char_ngram_hashes_flat(tl, n)
@@ -60,10 +73,10 @@ def minhash64_text_udf(n: int = 5):
 def jaccard_texts_udf(n: int = 5):
     """(text1, text2) → exact distinct-shingle Jaccard, numpy per batch —
     the INDEPENDENT reference for the JVM set-op verify (sh_jaccard):
-    re-shingles both sides from raw text and shares only the shingle
-    hashing (_flat_shingle_hashes) with the production kernel, not its
-    sh arrays or set ops, so the cross-kernel equivalence test pins the
-    whole features→set-ops chain.
+    re-shingles both sides from raw text and shares only the rolling
+    shingle hash (char_ngram_hashes_flat) with the production kernel,
+    not its dedup, sh arrays or set ops, so the cross-kernel equivalence
+    test pins the whole features→set-ops chain.
 
     Both sides' per-row-distinct shingle hashes are concatenated as
     (row, hash) pairs and lexsorted once — a (row, hash) appearing twice
@@ -73,8 +86,8 @@ def jaccard_texts_udf(n: int = 5):
     @F.pandas_udf(T.DoubleType())
     def _j(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
         for a, b in it:
-            ha, ra, _ = _flat_shingle_hashes(a, n)
-            hb, rb, _ = _flat_shingle_hashes(b, n)
+            ha, ra, _ = flat_shingle_hashes_lexsort(a, n)
+            hb, rb, _ = flat_shingle_hashes_lexsort(b, n)
             ca = np.bincount(ra, minlength=len(a))
             cb = np.bincount(rb, minlength=len(a))
             rows = np.concatenate([ra, rb])

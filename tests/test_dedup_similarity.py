@@ -5,11 +5,16 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from multi_task_offensive_language_detection_spark.operators import dedup, similarity
-from tests.lsh_reference import jaccard_texts_udf, minhash64_text_udf
+from tests.lsh_reference import (
+    flat_shingle_hashes_lexsort,
+    jaccard_texts_udf,
+    minhash64_text_udf,
+)
 
 
 @pytest.fixture(scope="module")
@@ -477,16 +482,72 @@ def test_features_udf_matches_reference_kernels(kernel_texts):
     pairs = a.join(b, F.col("a.k") < F.col("b.k")).select(
         F.col("a.k").alias("k1"),
         F.col("b.k").alias("k2"),
-        dedup.sh_jaccard(F.col("a.sh"), F.col("b.sh")).alias("j_arr"),
+        F.col("a.sh").alias("sh1"),
+        F.col("b.sh").alias("sh2"),
         jaccard_texts_udf(5)(F.col("a.t"), F.col("b.t")).alias("j_txt"),
     )
-    rows = pairs.collect()
+    rows = dedup.sh_jaccard(pairs, "sh1", "sh2").withColumnRenamed("jaccard", "j_arr").collect()
     assert len(rows) == 15
     for r in rows:
         assert r["j_arr"] == r["j_txt"], (r["k1"], r["k2"], r["j_arr"], r["j_txt"])
     # the planted near-dup really is near (sanity that the pin has teeth)
     near = {(r["k1"], r["k2"]): r["j_arr"] for r in rows}
     assert near[(0, 1)] > 0.8 and near[(0, 5)] == 1.0
+
+
+def _assert_same_flat_shingles(texts: list, n: int) -> None:
+    got = dedup._flat_shingle_hashes(pd.Series(texts, dtype=object), n)
+    ref = flat_shingle_hashes_lexsort(pd.Series(texts, dtype=object), n)
+    assert got[2] == ref[2] == len(texts)
+    for g, r in zip(got[:2], ref[:2]):
+        assert g.dtype == r.dtype and np.array_equal(g, r)
+
+
+@pytest.mark.parametrize("n", [1, 3, 5])
+def test_flat_shingle_dedup_matches_lexsort_reference(n):
+    """The per-row padded-sort dedup returns the same (hashes, rows,
+    nrows) arrays as one global lexsort of the (row, hash) stream, over
+    NULL, empty, shorter-than-n, repeated-shingle, NUL-containing and
+    non-BMP texts at both ends of a batch, and in an all-odd batch."""
+    rng = np.random.default_rng(n)
+    odd = [None, "", "ab", "aaaaaaaaaaaa", "a\x00b\x00cdef\x00", "😀😀😀😀x😀😀🙂", "\x00" * 9]
+    texts = odd + [
+        "".join(rng.choice(list("ab c😀"), rng.integers(0, 90))) for _ in range(500)
+    ] + odd
+    _assert_same_flat_shingles(texts, n)
+    _assert_same_flat_shingles([None, "", "ab"], n)
+
+
+def test_flat_shingle_dedup_bounded_on_huge_row():
+    """One ~1 MB text in a 10k-row batch: the dedup still matches the
+    lexsort reference, and its padding stays bounded. A pad to the
+    longest row would need ~10k x 2^20 slots (~80 GB); the count-class
+    pad keeps the peak Python-tracked allocation (the rolling hash itself
+    peaks near 3.7x) within a small multiple of the raw shingle stream."""
+    import tracemalloc
+
+    from multi_task_offensive_language_detection_spark.functions.hashing import (
+        char_ngram_hashes_flat,
+    )
+
+    rng = np.random.default_rng(7)
+    words = np.array("the people said they would go to the house by the river".split())
+    texts = [" ".join(rng.choice(words, rng.integers(0, 40))) for _ in range(9_999)]
+    texts.insert(4_321, " ".join(rng.choice(words, 200_000))[:1_000_000])
+    h, rows = char_ngram_hashes_flat(texts, 5)
+    stream_bytes = h.nbytes + rows.nbytes
+    del h, rows
+    series = pd.Series(texts)
+    tracemalloc.start()
+    try:
+        got = dedup._flat_shingle_hashes(series, 5)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 5 * stream_bytes, (peak, stream_bytes)
+    ref = flat_shingle_hashes_lexsort(series, 5)
+    assert got[2] == ref[2] == 10_000
+    assert np.array_equal(got[0], ref[0]) and np.array_equal(got[1], ref[1])
 
 
 def test_lsh_cache_swaps_not_stacks(spark, docs):
@@ -537,8 +598,6 @@ def test_features_udf_all_short_batch(spark):
 def test_xxhash64_longs_matches_spark(spark):
     """The numpy XXH64 chain is bit-equal to Catalyst's xxhash64 over
     long columns (the property the banding move rests on)."""
-    import pandas as pd
-
     from multi_task_offensive_language_detection_spark.functions.hashing import (
         xxhash64_longs,
     )

@@ -231,3 +231,27 @@ def test_stream_interval_join_no_cartesian(spark):
     assert "CartesianProduct" not in tree, tree
     assert "BroadcastNestedLoopJoin" not in tree, tree
     assert re.search(r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin", tree), tree
+
+
+def test_lsh_verify_intersects_once_per_pair(spark, tmp_path):
+    """The LSH verify evaluates array_intersect once per candidate pair:
+    the executed plans of minhash_lsh_pairs and lsh_index_query each
+    hold the expression exactly once (a threshold filter pushed into the
+    join condition inlines it there twice more, plus once in the
+    projection), and both verify joins stay ShuffledHashJoin."""
+    from multi_task_offensive_language_detection_spark.operators import dedup
+
+    df = spark.createDataFrame(
+        [(i, f"some text body number {i % 7} with enough shingle length") for i in range(50)],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "idx")
+    dedup.lsh_index_write(df.filter("doc_id < 30"), "doc_id", "text", idx)
+    for out in (
+        dedup.minhash_lsh_pairs(df, "doc_id", "text"),
+        dedup.lsh_index_query(df.filter("doc_id >= 30"), "doc_id", "text", idx),
+    ):
+        assert out.collect()
+        plan = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+        assert plan.count("array_intersect(") == 1, plan
+        assert len(re.findall(r"ShuffledHashJoin \[k", plan)) == 2, plan
