@@ -16,7 +16,10 @@ MinHash's features pass and SimHash's bit-packing:
                 array_intersect per candidate pair (sh_jaccard keeps the
                 threshold filter out of the verify join's condition,
                 where Catalyst would evaluate the intersection twice per
-                candidate and once more per survivor).
+                candidate and once more per survivor). The features go
+                through one keyed exchange that every consumer reuses,
+                so the Arrow pass runs once per query with nothing
+                cached and no Spark job run before an action.
                 Shuffle cost: one explode + one groupBy on (band, hash);
                 shingle-less texts are excluded and degenerate buckets
                 capped (with stats accounting), so candidate volume is
@@ -328,9 +331,14 @@ def _lsh_base(df: DataFrame, key_col: str, text_col: str, n: int) -> DataFrame:
     """(k, t, bhs, sh) projection for the LSH path: per-band bucket hashes
     + distinct shingle-hash array from one Arrow pass (see
     minhash64_band_features_udf). Texts with no n-shingles are excluded
-    here — see minhash_lsh_pairs docstring."""
+    here — see minhash_lsh_pairs docstring — and so are NULL keys: a
+    NULL key never forms a pair (``k1 < k2`` is NULL), so it must not
+    count toward a bucket's cap either. Filtering them here, below the
+    features exchange, also keeps the verify joins from inferring
+    ``isnotnull(k)`` on their branches only, which would give those
+    branches an exchange that no longer matches the banding one."""
     base = df.select(F.col(key_col).alias("k"), F.col(text_col).alias("t")).filter(
-        F.length(F.col(text_col)) >= F.lit(n)
+        F.col("k").isNotNull() & (F.length("t") >= F.lit(n))
     )
     # The features UDF is the compute-heavy stage: spread it over every
     # core when the source arrives under-partitioned (one small parquet
@@ -351,9 +359,38 @@ def _lsh_base(df: DataFrame, key_col: str, text_col: str, n: int) -> DataFrame:
 
 
 def _lsh_banded_bhs(base: DataFrame) -> DataFrame:
-    """(k, band, bh) explode of a precomputed band-hash frame — a plain
-    posexplode, codegen-trivial (the band hash chain already ran)."""
-    return base.select("k", F.posexplode("bhs").alias("band", "bh"))
+    """(k, band, bh) explode of a precomputed band-hash frame,
+    codegen-trivial (the band hash chain already ran). ``bhs`` always
+    holds LSH_BANDS entries, so ``posexplode_outer`` yields the same rows
+    as ``posexplode``; the plain form makes Catalyst infer a
+    ``size(bhs) > 0`` filter and push it below the features exchange,
+    where it splits that exchange and re-runs the features UDF (the same
+    reason operators/audio.py uses ``explode_outer``)."""
+    return base.select("k", F.posexplode_outer("bhs").alias("band", "bh"))
+
+
+def _lsh_features(df: DataFrame, key_col: str, text_col: str, n: int) -> DataFrame:
+    """(k, bhs, sh) LSH features shuffled ONCE by key, so every consumer
+    — the banding explode, the bucket-cap count and both verify joins —
+    reads the same exchange. AQE reuses that shuffle stage
+    (ReusedExchange), so the Arrow features UDF runs once per query:
+    nothing is cached, nothing needs releasing, and the calling operator
+    stays lazy.
+
+    The features cross the exchange as ONE packed array
+    ``f = bhs ++ sh`` and are sliced apart above it. With separate
+    columns (or a struct, via nested-column pruning) Catalyst prunes the
+    exchange per consumer into (k, bhs) and (k, sh) copies, and each
+    extra copy runs the UDF again. The raw text stays below the
+    exchange: verify runs on the sh arrays, so shuffling it would only
+    add bytes to the exchange and the verify joins' build sides."""
+    base = _lsh_base(df, key_col, text_col, n)
+    packed = base.select("k", F.concat("bhs", "sh").alias("f")).repartition("k")
+    return packed.select(
+        "k",
+        F.slice("f", 1, LSH_BANDS).alias("bhs"),
+        F.slice("f", LSH_BANDS + 1, F.size("f") - LSH_BANDS).alias("sh"),
+    )
 
 
 def _capped_buckets_one_exchange(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
@@ -380,43 +417,6 @@ def _capped_buckets_one_exchange(df: DataFrame, keys: list[str], cap: int) -> Da
         .drop("_bsz")
     )
     return df.join(F.broadcast(over), keys, "left_anti")
-
-
-#: one live persisted frame per LSH operator (r6 verdict #4): each
-#: operator fills its features cache eagerly when called but returns a
-#: LAZY pair frame that keeps reading that cache, so no caller can know
-#: when the cache is releasable — but by the time the SAME operator runs
-#: again in a process, the previous invocation's plan is either consumed
-#: or abandoned. Swapping on entry bounds the cache footprint at one
-#: frame per operator instead of one per call (the r6 leak: three bench
-#: runs stacked three cached copies of the features frame).
-_ACTIVE_CACHES: dict[str, DataFrame] = {}
-
-
-def _swap_persist(df: DataFrame, slot: str) -> DataFrame:
-    """Persist ``df``, releasing the slot's previous cache, and
-    MATERIALIZE it eagerly before returning.
-
-    The eager count matters as much as the persist (r7, event-log
-    diagnosis): the LSH operators fan the persisted frame out to four
-    consumers (banding explode, bucket-cap count, and both verify join
-    sides), and AQE submits those leaf stages as CONCURRENT jobs. With a
-    lazy persist no cache partition exists when the race starts, so each
-    job recomputed the whole Arrow features stage — four overlapping
-    ~3.6 s UDF stages per run at 10x bench scale, 4x the Python-worker
-    demand (128 concurrent workers), and bimodal 5 s / 20 s walls
-    depending on who won the race. One cheap count() populates the cache
-    once; every consumer then reads InMemoryTableScan hits."""
-    prev = _ACTIVE_CACHES.pop(slot, None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # session already stopped — nothing to release
-            pass
-    df = df.persist()
-    _ACTIVE_CACHES[slot] = df
-    df.count()
-    return df
 
 
 def minhash_lsh_bucket_stats(
@@ -457,12 +457,15 @@ def minhash_lsh_pairs(
     hashes in LSH_BANDS bands of LSH_ROWS), verified with exact shingle
     Jaccard.
 
-    Not fully lazy: the call runs one Spark job that fills the persisted
-    features cache (k, bhs, sh) before it returns — see _swap_persist;
-    the returned pair frame is lazy and reads that cache.
+    Lazy: the call runs no Spark job and caches nothing. The features
+    cross one keyed exchange that the banding and both verify joins
+    reuse, so the Arrow stage runs once per action (see _lsh_features).
+    Filter the INPUT rather than the returned pairs: a filter on ``k1``
+    or ``k2`` is pushed into one verify side, splits that exchange and
+    runs the features UDF twice (results stay correct).
 
-    Plan: Arrow features stage (band hashes + shingle hashes) →
-    posexplode(bhs) [rows ×LSH_BANDS] →
+    Plan: Arrow features stage (band hashes + shingle hashes) → keyed
+    exchange → posexplode_outer(bhs) [rows ×LSH_BANDS] →
     bucket cap → groupBy(band, band_hash) collect_list → double explode
     (k1 < k2) candidate pairs → verify join back to the precomputed
     shingle-hash arrays → sh_jaccard (one array_intersect per pair; its
@@ -495,16 +498,7 @@ def minhash_lsh_pairs(
       is a recall cap, not a silent one — ``minhash_lsh_bucket_stats``
       reports the dropped mass with the same parameters."""
     _check_lsh_params(n, verify_threshold, max_bucket_size)
-    base = _lsh_base(df, key_col, text_col, n)
-    # persisted: the banding explode AND the verify join re-read this
-    # frame (at table scale: persist to disk / checkpoint the features).
-    # The raw text is dropped first — verify runs on the sh arrays, so
-    # persisting t would only add bytes to the cache and the verify
-    # joins' build sides. _swap_persist fills the cache now, eagerly, and
-    # releases the PREVIOUS invocation's cache (r6 leak fix): the lazy
-    # pair frame returned below keeps reading this one, so no caller can
-    # release it, and the next call does.
-    base = _swap_persist(base.select("k", "bhs", "sh"), "minhash_lsh_pairs")
+    base = _lsh_features(df, key_col, text_col, n)
 
     banded = _lsh_banded_bhs(base)
 
@@ -718,13 +712,15 @@ def lsh_index_write(
     the pipeline's counters)."""
     _check_lsh_params(n)
     base = _lsh_base(df, key_col, text_col, n).persist()
-    banded = _lsh_banded_bhs(base)
-    banded.write.mode(mode).partitionBy("band").parquet(path + "/banded")
-    banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("cnt")).write.mode(
-        mode
-    ).parquet(path + "/bucket_counts")
-    base.select("k", "t", "sh").write.mode(mode).parquet(path + "/texts")
-    base.unpersist()
+    try:
+        banded = _lsh_banded_bhs(base)
+        banded.write.mode(mode).partitionBy("band").parquet(path + "/banded")
+        banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("cnt")).write.mode(
+            mode
+        ).parquet(path + "/bucket_counts")
+        base.select("k", "t", "sh").write.mode(mode).parquet(path + "/texts")
+    finally:
+        base.unpersist()
 
 
 def lsh_index_query(
@@ -744,17 +740,13 @@ def lsh_index_query(
     (old ∪ new) would return for new↔old key pairs, including the
     bucket-cap decision, which uses index counts + batch counts.
 
-    Like minhash_lsh_pairs, the call eagerly fills the batch's persisted
-    features cache (one Spark job) before it returns the lazy pair
-    frame."""
+    Lazy like minhash_lsh_pairs: the only jobs the call runs are the
+    schema reads of the index's parquet files. The batch's features
+    cross one keyed exchange that its banding explode, its bucket
+    counts and its verify join all reuse (see _lsh_features)."""
     _check_lsh_params(n, verify_threshold, max_bucket_size)
     spark = new_df.sparkSession
-    # persist only what downstream re-reads: bhs for the banding explode
-    # + counts, sh for the verify join
-    new_base = _swap_persist(
-        _lsh_base(new_df, key_col, text_col, n).select("k", "bhs", "sh"),
-        "lsh_index_query",
-    )
+    new_base = _lsh_features(new_df, key_col, text_col, n)
     new_banded = _lsh_banded_bhs(new_base)
     idx = spark.read.parquet(path + "/banded")
 

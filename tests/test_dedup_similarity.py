@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -550,23 +551,74 @@ def test_flat_shingle_dedup_bounded_on_huge_row():
     assert np.array_equal(got[0], ref[0]) and np.array_equal(got[1], ref[1])
 
 
+def _n_persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
 def test_lsh_cache_swaps_not_stacks(spark, docs):
-    """r7 lifecycle fix (r6 verdict #4): repeated minhash_lsh_pairs
-    invocations must not accumulate persisted frames — each call
-    releases the previous call's cache, so three consecutive runs leave
-    at most ONE live cached RDD from this operator."""
-    sc = spark.sparkContext
-
-    def n_cached() -> int:
-        return sc._jsc.sc().getPersistentRDDs().size()
-
+    """Repeated minhash_lsh_pairs runs leave no persisted frame behind:
+    the features reach every consumer through one reused keyed exchange,
+    not a cache, so the persistent-RDD count is unchanged after three
+    consecutive runs."""
     spark.catalog.clearCache()
-    before = n_cached()
+    before = _n_persistent_rdds(spark)
     for _ in range(3):
         dedup.minhash_lsh_pairs(docs, "doc_id", "text", verify_threshold=0.8).write.mode(
             "overwrite"
         ).format("noop").save()
-    assert n_cached() <= before + 1
+    assert _n_persistent_rdds(spark) == before
+
+
+def test_lsh_index_write_releases_cache_on_failed_write(spark, docs, tmp_path):
+    """lsh_index_write persists its features only for the length of the
+    call, also when a write fails: a second mode="error" write to the
+    same path raises and leaves the persistent-RDD count unchanged."""
+    from pyspark.errors import AnalysisException
+
+    idx = str(tmp_path / "idx")
+    dedup.lsh_index_write(docs, "doc_id", "text", idx)
+    before = _n_persistent_rdds(spark)
+    with pytest.raises(AnalysisException, match="already exists"):
+        dedup.lsh_index_write(docs, "doc_id", "text", idx, mode="error")
+    assert _n_persistent_rdds(spark) == before
+
+
+def test_lsh_null_keys_do_not_count_toward_bucket_cap(spark, tmp_path):
+    """A NULL key can never form a pair (k1 < k2 is NULL), so it leaves
+    the LSH path before banding and cannot cost real pairs their recall
+    through the bucket cap: three identical texts keyed 1, 2 and NULL
+    under max_bucket_size=2 give the pair (1, 2) and no dropped bucket,
+    and the incremental index applies the same rule."""
+    text = "the quick brown fox jumps over the lazy dog"
+    df = spark.createDataFrame(
+        [(1, text), (2, text), (None, text)], "doc_id long, text string"
+    )
+    pairs = dedup.minhash_lsh_pairs(df, "doc_id", "text", max_bucket_size=2)
+    assert {(r["k1"], r["k2"]) for r in pairs.collect()} == {(1, 2)}
+    stats = dedup.minhash_lsh_bucket_stats(
+        df, "doc_id", "text", max_bucket_size=2
+    ).collect()[0]
+    assert stats["dropped_buckets"] == 0
+    idx = str(tmp_path / "idx")
+    dedup.lsh_index_write(df.filter("doc_id IS NULL OR doc_id = 1"), "doc_id", "text", idx)
+    got = dedup.lsh_index_query(
+        df.filter("doc_id = 2"), "doc_id", "text", idx, max_bucket_size=2
+    )
+    assert {(r["k_new"], r["k_old"]) for r in got.collect()} == {(2, 1)}
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs started while ``fn`` runs, counted under a fresh job
+    group (a group's job list accumulates across uses)."""
+    sc = spark.sparkContext
+    group = f"lsh-laziness-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_features_udf_all_short_batch(spark):
@@ -622,23 +674,22 @@ def test_xxhash64_longs_matches_spark(spark):
     assert (got2 == exp2).all() and (got1 == exp1).all()
 
 
-def test_lsh_persist_is_materialized_eagerly(spark, docs):
-    """r7: _swap_persist must populate the cache BEFORE the operator
-    returns — a lazy persist let AQE's four concurrent consumers of the
-    base frame (banding, cap count, both verify sides) race to compute
-    the Arrow features stage, each paying the full UDF cost. Building
-    the plan (no action on the result yet) must leave the slot's cache
-    with its blocks already stored."""
-    from multi_task_offensive_language_detection_spark.operators.dedup import (
-        _ACTIVE_CACHES,
+def test_lsh_operators_are_lazy(spark, docs, tmp_path):
+    """Calling the LSH pair operators builds a plan and runs nothing:
+    minhash_lsh_pairs starts no Spark job (capped or not), and
+    lsh_index_query starts only the schema reads of the index's three
+    parquet outputs — the same jobs as reading them directly."""
+    idx = str(tmp_path / "idx")
+    dedup.lsh_index_write(docs, "doc_id", "text", idx)
+    for cap in (1000, None):
+        call = lambda: dedup.minhash_lsh_pairs(docs, "doc_id", "text", max_bucket_size=cap)
+        assert _jobs_started(spark, call) == 0
+    reads = _jobs_started(
+        spark,
+        lambda: [spark.read.parquet(f"{idx}/{p}") for p in ("banded", "bucket_counts", "texts")],
     )
-
-    spark.catalog.clearCache()
-    dedup.minhash_lsh_pairs(docs, "doc_id", "text", verify_threshold=0.8)
-    cached = _ACTIVE_CACHES["minhash_lsh_pairs"]
-    assert cached.storageLevel.useMemory
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    assert any(i.numCachedPartitions() > 0 for i in infos)
+    assert reads > 0
+    assert _jobs_started(spark, lambda: dedup.lsh_index_query(docs, "doc_id", "text", idx)) == reads
 
 
 _LSH_OPS = {

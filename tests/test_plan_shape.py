@@ -233,25 +233,50 @@ def test_stream_interval_join_no_cartesian(spark):
     assert re.search(r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin", tree), tree
 
 
-def test_lsh_verify_intersects_once_per_pair(spark, tmp_path):
-    """The LSH verify evaluates array_intersect once per candidate pair:
-    the executed plans of minhash_lsh_pairs and lsh_index_query each
-    hold the expression exactly once (a threshold filter pushed into the
-    join condition inlines it there twice more, plus once in the
-    projection), and both verify joins stay ShuffledHashJoin."""
+@pytest.fixture(scope="module")
+def lsh_executed_plans(spark, tmp_path_factory):
+    """Final executed plans of minhash_lsh_pairs (capped and uncapped)
+    and lsh_index_query, read from the frames that were collected:
+    ``.count()`` plans a different query, and an adaptive plan that has
+    not run shows no exchange reuse yet."""
     from multi_task_offensive_language_detection_spark.operators import dedup
 
     df = spark.createDataFrame(
         [(i, f"some text body number {i % 7} with enough shingle length") for i in range(50)],
         "doc_id long, text string",
     )
-    idx = str(tmp_path / "idx")
+    idx = str(tmp_path_factory.mktemp("lsh") / "idx")
     dedup.lsh_index_write(df.filter("doc_id < 30"), "doc_id", "text", idx)
-    for out in (
-        dedup.minhash_lsh_pairs(df, "doc_id", "text"),
-        dedup.lsh_index_query(df.filter("doc_id >= 30"), "doc_id", "text", idx),
+    plans = {}
+    for name, out in (
+        ("pairs", dedup.minhash_lsh_pairs(df, "doc_id", "text")),
+        ("pairs_uncapped", dedup.minhash_lsh_pairs(df, "doc_id", "text", max_bucket_size=None)),
+        ("index_query", dedup.lsh_index_query(df.filter("doc_id >= 30"), "doc_id", "text", idx)),
     ):
-        assert out.collect()
-        plan = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+        assert out.collect(), name
+        plans[name] = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    return plans
+
+
+def test_lsh_verify_intersects_once_per_pair(lsh_executed_plans):
+    """The LSH verify evaluates array_intersect once per candidate pair:
+    the executed plans of minhash_lsh_pairs and lsh_index_query each
+    hold the expression exactly once (a threshold filter pushed into the
+    join condition inlines it there twice more, plus once in the
+    projection), and both verify joins stay ShuffledHashJoin."""
+    for plan in lsh_executed_plans.values():
         assert plan.count("array_intersect(") == 1, plan
         assert len(re.findall(r"ShuffledHashJoin \[k", plan)) == 2, plan
+
+
+def test_lsh_features_run_once_through_reused_exchange(lsh_executed_plans):
+    """The LSH features UDF runs ONCE per query and nothing is cached:
+    the banding explode, the bucket-cap count and both verify joins read
+    one keyed exchange of the packed features, which AQE reuses. A
+    second ArrowEvalPython means an exchange split (a pruned column, an
+    inferred filter pushed below it), and an InMemoryTableScan means a
+    persisted features frame."""
+    for name, plan in lsh_executed_plans.items():
+        assert plan.count("ArrowEvalPython") == 1, (name, plan)
+        assert "InMemoryTableScan" not in plan, (name, plan)
+        assert "ReusedExchange" in plan, (name, plan)
