@@ -12,7 +12,7 @@ module, per the anti-tautology rule SURVEY.md §5.2.1). Same seed ⇒
 byte-stable artifacts ⇒ retry-deterministic scoring.
 
 At cluster scale these files ship via ``spark-submit --files`` and load
-once per Python worker (see langid._load / perplexity._load).
+once per Python worker (see operators/scoring.py ``_load_models``).
 """
 
 from __future__ import annotations

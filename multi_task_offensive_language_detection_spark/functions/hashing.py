@@ -1,13 +1,17 @@
 """Vectorized n-gram hashing kernels (SURVEY.md F13) — pure numpy.
 
-Shared feature extractor for the langid scorer (char n-grams) and the
-perplexity scorer (word n-grams). fastText-style hashing trick: n-grams
-are bucketed by a multiplicative rolling hash into a fixed-size table, so
-model artifacts are dense numpy arrays that broadcast cheaply to
-executors (no vocabulary dictionaries to pickle).
+One kernel per hash family, shared by training and scoring:
 
-Everything operates on batches (lists/Series of strings) and returns
-numpy arrays — these run inside Arrow-batched pandas UDFs only.
+- ``char_ngram_hashes_flat`` — rolling FNV over char n-grams; langid
+  training, langid scoring and MinHash shingling;
+- ``token_hash_batch`` / ``token_hash_batch_ex`` + ``combine_hashes`` —
+  word unigrams and bigrams; LM training, perplexity scoring and lexicon
+  membership.
+
+Kernels return raw uint64 hashes; callers bucket them (``h % n_buckets``,
+the fastText-style hashing trick) so model artifacts are dense numpy
+arrays that broadcast cheaply to executors (no vocabulary dictionaries
+to pickle). Everything operates on batches (lists/Series of strings).
 """
 
 from __future__ import annotations
@@ -28,25 +32,16 @@ def hash_bytes_u64(data: bytes) -> int:
     return h
 
 
-def char_ngram_buckets(text: str, n: int, n_buckets: int) -> np.ndarray:
-    """Bucket ids of all char n-grams of ``text`` (vectorized rolling FNV).
-
-    Returns an int64 array of length max(len(text)-n+1, 0).
-    """
-    if len(text) < n:
-        return np.empty(0, dtype=np.int64)
-    codes = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    h = np.full(len(codes) - n + 1, _H_INIT, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for k in range(n):
-            h = (h ^ codes[k : k + len(h)]) * _H_MULT
-    return (h % np.uint64(n_buckets)).astype(np.int64)
-
-
 def char_ngram_hashes_flat(texts: list[str], n: int) -> tuple[np.ndarray, np.ndarray]:
-    """Raw uint64 rolling-FNV hashes of all char n-grams of a text batch
-    plus row ids (no bucketing) — the kernel behind flat shingling for
-    MinHash/Jaccard where full hash identity matters."""
+    """Raw uint64 rolling-FNV hashes of all char n-grams of a text batch,
+    plus the row id of each n-gram — the one char kernel behind langid
+    training, langid scoring and MinHash shingling.
+
+    One rolling hash runs over ALL texts joined by a NUL separator (NULs
+    inside a text become ' '); windows crossing a separator are masked
+    out, so every row gets exactly the n-grams it would get alone, in
+    text order, and row ids come out sorted. Callers bucket the values
+    themselves (``h % n_buckets``); MinHash keeps full hash identity."""
     if not texts:
         return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
     blob = "\x00".join(t.replace("\x00", " ") for t in texts)
@@ -65,40 +60,6 @@ def char_ngram_hashes_flat(texts: list[str], n: int) -> tuple[np.ndarray, np.nda
     text_starts = np.concatenate(([0], np.nonzero(sep)[0] + 1))
     row_ids = np.searchsorted(text_starts, win_start, side="right") - 1
     return h[valid], row_ids
-
-
-def char_ngram_buckets_flat(
-    texts: list[str], n: int, n_buckets: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Batched form of char_ngram_buckets: one rolling hash over ALL texts
-    joined by a NUL separator, windows crossing a boundary masked out.
-
-    Returns (bucket_ids, row_ids) — row_ids maps each n-gram back to its
-    source text; per-row reductions then use np.bincount. Produces bucket
-    values IDENTICAL to char_ngram_buckets (same constants, same utf-32
-    rolling hash), so artifacts trained per-text score correctly here.
-    """
-    if not texts:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    blob = "\x00".join(t.replace("\x00", " ") for t in texts)
-    codes = np.frombuffer(blob.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    if len(codes) < n:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    n_win = len(codes) - n + 1
-    h = np.full(n_win, _H_INIT, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for k in range(n):
-            h = (h ^ codes[k : k + n_win]) * _H_MULT
-    # mask windows containing the separator (codepoint 0)
-    sep = (codes == 0).astype(np.int64)
-    csum = np.concatenate(([0], np.cumsum(sep)))
-    valid = (csum[n:] - csum[:-n]) == 0  # seps inside window [i, i+n)
-    win_start = np.nonzero(valid)[0]
-    buckets = (h[valid] % np.uint64(n_buckets)).astype(np.int64)
-    # row of each window: searchsorted against text start offsets
-    text_starts = np.concatenate(([0], np.nonzero(sep)[0] + 1))
-    row_ids = np.searchsorted(text_starts, win_start, side="right") - 1
-    return buckets, row_ids
 
 
 #: position weights for the polynomial token hash: odd multiplier powers.
@@ -193,22 +154,6 @@ def combine_hashes(h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
     """Order-sensitive combiner for n-gram hashes from unigram hashes."""
     with np.errstate(over="ignore"):
         return (h1 * _H_MULT) ^ h2
-
-
-def token_buckets(tokens: list[str], n_buckets: int) -> np.ndarray:
-    """Unigram bucket ids (vectorized)."""
-    return (token_hash_batch(tokens) % np.uint64(n_buckets)).astype(np.int64)
-
-
-def token_ngram_buckets(tokens: list[str], n: int, n_buckets: int) -> np.ndarray:
-    """Bucket ids of word n-grams, composed from unigram hashes."""
-    if len(tokens) < n:
-        return np.empty(0, dtype=np.int64)
-    h = token_hash_batch(tokens)
-    g = h[: len(h) - n + 1]
-    for k in range(1, n):
-        g = combine_hashes(g, h[k : len(h) - n + 1 + k])
-    return (g % np.uint64(n_buckets)).astype(np.int64)
 
 
 # --- Spark-compatible XxHash64 over long columns (vectorized) -----------------

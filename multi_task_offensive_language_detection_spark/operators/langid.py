@@ -5,25 +5,21 @@ north_rule's "fastText langid" gate (P6). Model = one dense float32
 log-probability matrix per n-gram order, trained offline by
 ``artifacts_build.py`` on the engine's deterministic multilingual corpus
 and shipped as an ``.npz`` broadcast artifact (the Spark analog of the
-reference's torch checkpoint, SURVEY.md S5).
+reference's torch checkpoint, SURVEY.md S5). Training and scoring share
+one hash kernel (``functions.hashing.char_ngram_hashes_flat``).
 
-Scoring runs as an ``Iterator[pd.Series] → Iterator[pd.DataFrame]``
-pandas UDF so the artifact loads ONCE per Python worker (Arrow-batched;
-no per-row Python at the Spark level).
+Scoring runs only inside the fused scoring UDF
+(``operators/scoring.py``, one Arrow boundary for every model), which
+loads the artifact once per Python worker and calls ``score_batch`` on
+each Arrow batch.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Optional
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.hashing import char_ngram_buckets
+from ..functions.hashing import char_ngram_hashes_flat
 
 NGRAM_ORDERS = (3,)
 N_BUCKETS = 1 << 16
@@ -31,13 +27,6 @@ N_BUCKETS = 1 << 16
 #: this; capping bounds memory traffic per row (the scorer is
 #: bandwidth-bound, not compute-bound)
 MAX_CHARS = 128
-
-LANGID_RESULT = T.StructType(
-    [
-        T.StructField("lang", T.StringType()),
-        T.StructField("conf", T.DoubleType()),
-    ]
-)
 
 
 class LangidModel:
@@ -55,24 +44,23 @@ class LangidModel:
 
     @classmethod
     def train(cls, corpus: list[tuple[str, str]], alpha: float = 0.5) -> "LangidModel":
-        """corpus: (lang, text) pairs; add-alpha smoothed bucket counts."""
+        """corpus: (lang, text) pairs; add-alpha smoothed bucket counts —
+        one pass of the scoring kernel over the whole corpus, one
+        bincount keyed by (language, bucket)."""
         langs = sorted({lang for lang, _ in corpus})
         idx = {lang: i for i, lang in enumerate(langs)}
+        lang_idx = np.fromiter(
+            (idx[lang] for lang, _ in corpus), dtype=np.int64, count=len(corpus)
+        )
+        texts = [text.lower() for _, text in corpus]
         logp: dict[int, np.ndarray] = {}
-        counts = {
-            n: np.zeros((len(langs), N_BUCKETS), dtype=np.float64) for n in NGRAM_ORDERS
-        }
-        n_docs = np.zeros(len(langs), dtype=np.float64)
-        for lang, text in corpus:
-            i = idx[lang]
-            n_docs[i] += 1
-            for n in NGRAM_ORDERS:
-                b = char_ngram_buckets(text.lower(), n, N_BUCKETS)
-                if len(b):
-                    np.add.at(counts[n][i], b, 1.0)
         for n in NGRAM_ORDERS:
-            c = counts[n] + alpha
+            h, rows = char_ngram_hashes_flat(texts, n)
+            key = lang_idx[rows] * N_BUCKETS + (h % np.uint64(N_BUCKETS)).astype(np.int64)
+            counts = np.bincount(key, minlength=len(langs) * N_BUCKETS)
+            c = counts.reshape(len(langs), N_BUCKETS) + alpha
             logp[n] = np.log(c / c.sum(axis=1, keepdims=True)).astype(np.float32)
+        n_docs = np.bincount(lang_idx, minlength=len(langs)).astype(np.float64)
         prior = np.log(n_docs / n_docs.sum()).astype(np.float32)
         return cls(langs, logp, prior)
 
@@ -97,20 +85,19 @@ class LangidModel:
         """Batch argmax language + posterior confidence — fully vectorized:
         ONE rolling hash over the whole Arrow batch, per-row log-lik sums
         via bincount, no Python loop over rows."""
-        from ..functions.hashing import char_ngram_buckets_flat
-
         tl = [str(t)[:MAX_CHARS].lower() for t in texts.fillna("")]
         n_rows = len(tl)
         ll = np.tile(self.prior.astype(np.float64)[:, None], (1, n_rows))
         n_feats = np.zeros(n_rows, dtype=np.int64)
         for n in NGRAM_ORDERS:
-            buckets, rows = char_ngram_buckets_flat(tl, n, N_BUCKETS)
-            if len(buckets) == 0:
+            h, rows = char_ngram_hashes_flat(tl, n)
+            if len(h) == 0:
                 continue
             # stride-2 sampling: half the n-grams carry far more signal
             # than the decision needs (confidences sit at ~1.0) and the
             # scorer is bandwidth-bound — sampling halves memory traffic
-            buckets, rows = buckets[::2], rows[::2]
+            h, rows = h[::2], rows[::2]
+            buckets = (h % np.uint64(N_BUCKETS)).astype(np.int64)
             gathered = self.logp_t[n][buckets]  # (W, L) float32, contiguous rows
             # segment-sum via reduceat over NONEMPTY rows only (rows are
             # sorted by construction). Boundaries come from cumsum of the
@@ -136,36 +123,3 @@ class LangidModel:
         langs[n_feats == 0] = "und"
         confs[n_feats == 0] = 0.0
         return pd.DataFrame({"lang": langs, "conf": confs})
-
-
-# --- Spark surface ---------------------------------------------------------
-
-_MODEL_CACHE: dict[str, LangidModel] = {}
-
-
-def _load(path: str) -> LangidModel:
-    m = _MODEL_CACHE.get(path)
-    if m is None:
-        m = _MODEL_CACHE[path] = LangidModel.load(path)
-    return m
-
-
-def langid_udf(artifact_path: str):
-    """Struct-returning pandas UDF: text → struct<lang:string, conf:double>."""
-
-    @F.pandas_udf(LANGID_RESULT)
-    def _langid(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        model = _load(artifact_path)  # once per worker
-        for s in it:
-            yield model.score_batch(s)
-
-    return _langid
-
-
-def with_langid(df, text_col: str, artifact_path: str, out_col: str = "langid") -> "DataFrame":  # noqa: F821
-    return df.withColumn(out_col, langid_udf(artifact_path)(F.col(text_col)))
-
-
-def langid_gate(lang_col: Column, conf_col: Column, target: str = "en", min_conf: float = 0.0) -> Column:
-    """P6 — boolean keep-gate on the langid output."""
-    return (lang_col == target) & (conf_col >= min_conf)

@@ -18,24 +18,34 @@ quality-filter semantic the north_rule asks for — not next-word modeling.
 Trained offline by artifacts_build.py on the engine's English corpus
 (includes the scrub placeholder tokens so post-scrub transcripts score
 over a fully known vocabulary); shipped as .npz broadcast artifact.
+Training and scoring share one tokenization (``_token_stream``) and one
+hash kernel (``functions.hashing.token_hash_batch`` + ``combine_hashes``).
+
+Scoring runs only inside the fused scoring UDF
+(``operators/scoring.py``), which loads the artifact once per Python
+worker and calls ``ppl_stats_batch`` on each Arrow batch.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.hashing import token_buckets, token_ngram_buckets
+from ..functions.hashing import combine_hashes, token_hash_batch, token_hash_batch_ex
 
 UNI_BUCKETS = 1 << 18
 BI_BUCKETS = 1 << 20
 BACKOFF = 0.4
 P_UNK = 1e-9
+
+
+def _token_stream(texts) -> tuple[list[str], np.ndarray, np.ndarray]:
+    """(flat lowercased whitespace tokens, tokens per row, row id per
+    token) of a batch of non-null texts."""
+    tok_lists = [str(t).lower().split() for t in texts]
+    n_tok = np.fromiter(map(len, tok_lists), dtype=np.int64, count=len(tok_lists))
+    flat = [t for toks in tok_lists for t in toks]
+    return flat, n_tok, np.repeat(np.arange(len(tok_lists)), n_tok)
 
 
 class NgramLM:
@@ -46,19 +56,14 @@ class NgramLM:
 
     @classmethod
     def train(cls, texts: list[str]) -> "NgramLM":
-        uni = np.zeros(UNI_BUCKETS, dtype=np.int64)
-        bi = np.zeros(BI_BUCKETS, dtype=np.int64)
-        total = 0
-        for text in texts:
-            toks = text.lower().split()
-            if not toks:
-                continue
-            total += len(toks)
-            np.add.at(uni, token_buckets(toks, UNI_BUCKETS), 1)
-            b2 = token_ngram_buckets(toks, 2, BI_BUCKETS)
-            if len(b2):
-                np.add.at(bi, b2, 1)
-        return cls(uni, bi, total)
+        """Unigram and same-row bigram bucket counts — one pass of the
+        scoring kernel over the whole corpus's token stream."""
+        flat, _, rows = _token_stream(texts)
+        h = token_hash_batch(flat)
+        uni = np.bincount((h % np.uint64(UNI_BUCKETS)).astype(np.int64), minlength=UNI_BUCKETS)
+        g = combine_hashes(h[:-1], h[1:])[rows[:-1] == rows[1:]]
+        bi = np.bincount((g % np.uint64(BI_BUCKETS)).astype(np.int64), minlength=BI_BUCKETS)
+        return cls(uni, bi, len(flat))
 
     def save(self, path: str) -> None:
         np.savez_compressed(path, uni=self.uni, bi=self.bi, total=np.int64(self.total))
@@ -69,11 +74,7 @@ class NgramLM:
         return cls(z["uni"], z["bi"], int(z["total"]))
 
     def ppl(self, text: str) -> float:
-        return float(self.ppl_batch(pd.Series([text])).iloc[0])
-
-    def ppl_batch(self, texts: pd.Series) -> pd.Series:
-        ppl, _, _ = self.ppl_stats_batch(texts)
-        return pd.Series(ppl, index=texts.index)
+        return float(self.ppl_stats_batch(pd.Series([text]))[0][0])
 
     def ppl_stats_batch(self, texts: pd.Series, return_stream: bool = False):
         """Batch Stupid-Backoff perplexity — one vectorized hash pass over
@@ -92,12 +93,8 @@ class NgramLM:
         row_ids, pure_word_mask)`` is returned so downstream lexicon
         matching (operators/scoring.py) reuses this tokenization+hash
         pass instead of paying its own."""
-        from ..functions.hashing import combine_hashes, token_hash_batch_ex
-
-        tok_lists = [str(t).lower().split() for t in texts.fillna("")]
-        n_rows = len(tok_lists)
-        n_tok = np.fromiter((len(t) for t in tok_lists), dtype=np.int64, count=n_rows)
-        flat: list[str] = [t for toks in tok_lists for t in toks]
+        flat, n_tok, rows = _token_stream(texts.fillna(""))
+        n_rows = len(n_tok)
         if not flat:
             empty = (
                 np.full(n_rows, np.inf),
@@ -107,8 +104,6 @@ class NgramLM:
             if return_stream:
                 return (*empty, (flat, np.empty(0, np.uint64), np.empty(0, np.int64), np.empty(0, bool)))
             return empty
-        rows = np.repeat(np.arange(n_rows), n_tok)
-
         h, pure = token_hash_batch_ex(flat, want_pure=return_stream)
         c1 = self.uni[(h % np.uint64(UNI_BUCKETS)).astype(np.int64)].astype(np.float64)
         p = np.where(c1 > 0, BACKOFF * c1 / self.total, BACKOFF * P_UNK)
@@ -146,34 +141,3 @@ class NgramLM:
         if return_stream:
             return out, n_tok, rep, (flat, h, rows, pure)
         return out, n_tok, rep
-
-
-# --- Spark surface ---------------------------------------------------------
-
-_LM_CACHE: dict[str, NgramLM] = {}
-
-
-def _load(path: str) -> NgramLM:
-    m = _LM_CACHE.get(path)
-    if m is None:
-        m = _LM_CACHE[path] = NgramLM.load(path)
-    return m
-
-
-def ppl_udf(artifact_path: str):
-    @F.pandas_udf(T.DoubleType())
-    def _ppl(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        lm = _load(artifact_path)  # once per worker
-        for s in it:
-            yield lm.ppl_batch(s)
-
-    return _ppl
-
-
-def with_ppl(df, text_col: str, artifact_path: str, out_col: str = "ppl"):
-    return df.withColumn(out_col, ppl_udf(artifact_path)(F.col(text_col)))
-
-
-def ppl_gate(ppl_col: Column, ppl_max: float) -> Column:
-    """P8 — boolean keep-gate."""
-    return ppl_col <= ppl_max

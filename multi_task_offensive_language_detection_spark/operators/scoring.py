@@ -35,6 +35,7 @@ pinned cores on 2.4M clips: native pre-UDF stages 8.2s → 3.1s.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Iterator
 
@@ -44,8 +45,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lexicons import ENTITY_NOUNS, GROUP_NOUNS, PROFANITY, SECOND_PERSON
-from .langid import LangidModel, _MODEL_CACHE as _LANGID_CACHE
-from .perplexity import NgramLM, _LM_CACHE
+from .langid import LangidModel
+from .perplexity import NgramLM
 
 COMBINED_RESULT = T.StructType(
     [
@@ -178,20 +179,6 @@ def char_stats_batch(
     return caps, has_big, rep
 
 
-def _load_langid(path: str) -> LangidModel:
-    m = _LANGID_CACHE.get(path)
-    if m is None:
-        m = _LANGID_CACHE[path] = LangidModel.load(path)
-    return m
-
-
-def _load_lm(path: str) -> NgramLM:
-    m = _LM_CACHE.get(path)
-    if m is None:
-        m = _LM_CACHE[path] = NgramLM.load(path)
-    return m
-
-
 def _hash_lexicon(words: tuple[str, ...]) -> np.ndarray:
     from ..functions.hashing import token_hash_batch
 
@@ -207,19 +194,6 @@ class LexiconSignals:
         self.group = _hash_lexicon(GROUP_NOUNS)
         self.entity = _hash_lexicon(ENTITY_NOUNS)
 
-    def score(self, texts: list[str]):
-        """(prof_hits int32[n], sig int32[n]) for lowercased texts —
-        standalone form: builds its own \\w+-run stream."""
-        from ..functions.hashing import token_hash_batch
-
-        n = len(texts)
-        runs = [_WORD_RUN.findall(t) for t in texts]
-        counts = np.fromiter((len(r) for r in runs), dtype=np.int64, count=n)
-        flat = [w for r in runs for w in r]
-        rows = np.repeat(np.arange(n), counts)
-        h = token_hash_batch(flat) if flat else np.empty(0, np.uint64)
-        return self._score_hashes(n, h, rows)
-
     def score_stream(self, n: int, flat: list, h: np.ndarray, rows: np.ndarray, pure: np.ndarray):
         """(prof_hits, sig) reusing an existing WHITESPACE-token stream.
 
@@ -227,7 +201,8 @@ class LexiconSignals:
         token IS a maximal run (hash membership applies directly); only
         tokens carrying punctuation (rare in normalized transcripts) are
         re-split into runs and re-hashed. Result is exactly equal to
-        ``score`` over the joined text."""
+        scoring the \\w+ runs of the joined text (the stand-alone
+        reference in tests/lexicon_reference.py)."""
         from ..functions.hashing import token_hash_batch
 
         if len(h) == 0:
@@ -276,14 +251,11 @@ def _member(h: np.ndarray, sorted_hashes: np.ndarray) -> np.ndarray:
     return sorted_hashes[idx] == h
 
 
-_SIGNALS_CACHE: dict[str, LexiconSignals] = {}
-
-
-def _load_signals() -> LexiconSignals:
-    s = _SIGNALS_CACHE.get("x")
-    if s is None:
-        s = _SIGNALS_CACHE["x"] = LexiconSignals()
-    return s
+@functools.cache
+def _load_models(langid_path: str, lm_path: str) -> tuple[LangidModel, NgramLM, LexiconSignals]:
+    """The fused UDF's models — loaded once per Python worker and artifact
+    pair, then reused by every task that worker runs."""
+    return LangidModel.load(langid_path), NgramLM.load(lm_path), LexiconSignals()
 
 
 def combined_scores_udf(langid_path: str, lm_path: str, min_run: int = 5):
@@ -305,9 +277,7 @@ def combined_scores_udf(langid_path: str, lm_path: str, min_run: int = 5):
     def _score(
         it: Iterator[tuple[pd.Series, pd.Series]]
     ) -> Iterator[pd.DataFrame]:
-        langid = _load_langid(langid_path)  # once per worker
-        lm = _load_lm(lm_path)
-        lex = _load_signals()
+        langid, lm, lex = _load_models(langid_path, lm_path)
         for raw, pii in it:
             norm_text = _normalize_batch(pii)
             out = langid.score_batch(norm_text)

@@ -37,18 +37,43 @@ def test_clips_generator_deterministic():
     pd.testing.assert_frame_equal(a_gold, b_gold)
 
 
+#: sha256(arr.tobytes())[:16] of every artifact array at ARTIFACT_VERSION 5.
+#: A kernel or training edit that changes an artifact must bump
+#: ARTIFACT_VERSION (artifacts_build.py) and re-pin these.
+ARTIFACT_DIGESTS = {
+    "langid": {
+        "langs": "b3327837174d5652",
+        "logp_3": "ac87732f7ce74430",
+        "prior": "caaa6699e5aca1f7",
+    },
+    "lm": {
+        "uni": "dc425c6a57309014",
+        "bi": "2db760b5d8e6a17e",
+        "total": "2dd626c1556d6295",
+    },
+}
+
+
 def test_artifact_build_deterministic(tmp_path):
+    import hashlib
+
     import numpy as np
 
-    from multi_task_offensive_language_detection_spark.artifacts_build import build_all
+    from multi_task_offensive_language_detection_spark.artifacts_build import (
+        ARTIFACT_VERSION,
+        build_all,
+    )
 
     p1 = build_all(str(tmp_path / "a"), force=True)
     p2 = build_all(str(tmp_path / "b"), force=True)
+    assert ARTIFACT_VERSION == 5, "re-pin ARTIFACT_DIGESTS for the new version"
     for k in p1:
         z1, z2 = np.load(p1[k]), np.load(p2[k])
-        assert sorted(z1.files) == sorted(z2.files)
+        assert sorted(z1.files) == sorted(z2.files) == sorted(ARTIFACT_DIGESTS[k])
         for f in z1.files:
             assert np.array_equal(z1[f], z2[f]), f"{k}:{f} differs between builds"
+            digest = hashlib.sha256(z1[f].tobytes()).hexdigest()[:16]
+            assert digest == ARTIFACT_DIGESTS[k][f], f"{k}:{f} content changed"
 
 
 def test_clean_vocab_disjoint_from_engine_lexicons():

@@ -115,6 +115,7 @@ def test_lexicon_stream_equals_standalone_on_punctuated_batch(models):
     from multi_task_offensive_language_detection_spark.operators.scoring import (
         LexiconSignals,
     )
+    from tests.lexicon_reference import lexicon_score_standalone
 
     _, lm = models
     lex = LexiconSignals()
@@ -122,7 +123,7 @@ def test_lexicon_stream_equals_standalone_on_punctuated_batch(models):
         "damn, you idiots!!", "(scum)", "plain clean text", "",
         "trash...garbage", "you're a moron", "@user people here",
     ]
-    p_ref, s_ref = lex.score(texts)
+    p_ref, s_ref = lexicon_score_standalone(lex, texts)
     _, _, _, stream = lm.ppl_stats_batch(pd.Series(texts), return_stream=True)
     p_st, s_st = lex.score_stream(len(texts), *stream)
     assert list(p_ref) == list(p_st)
