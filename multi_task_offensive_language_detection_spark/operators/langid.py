@@ -95,8 +95,12 @@ class LangidModel:
                 continue
             # stride-2 sampling: half the n-grams carry far more signal
             # than the decision needs (confidences sit at ~1.0) and the
-            # scorer is bandwidth-bound — sampling halves memory traffic
-            h, rows = h[::2], rows[::2]
+            # scorer is bandwidth-bound — sampling halves memory traffic.
+            # The stride restarts at each row's first n-gram, so a row
+            # keeps the same n-grams whatever rows precede it in the batch.
+            first = np.searchsorted(rows, np.arange(n_rows))
+            keep = (np.arange(len(rows)) - first[rows]) % 2 == 0
+            h, rows = h[keep], rows[keep]
             buckets = (h % np.uint64(N_BUCKETS)).astype(np.int64)
             gathered = self.logp_t[n][buckets]  # (W, L) float32, contiguous rows
             # segment-sum via reduceat over NONEMPTY rows only (rows are

@@ -76,18 +76,28 @@ def test_langid_empty_and_whitespace(models):
 
 
 def test_langid_batch_composition_independence(models):
-    # regression: the reduceat boundary clamp truncated the LAST
+    # regressions: the reduceat boundary clamp truncated the LAST
     # feature-bearing row whenever an Arrow batch ended with featureless
-    # rows (empty/short/null texts), making keep/drop depend on batch
-    # neighbors — scores must be exactly identical however rows batch
+    # rows (empty/short/null texts), and the stride-2 n-gram sample ran
+    # over the flattened batch, so a row's kept n-grams depended on the
+    # parity of the n-grams before it ("abc" has one) — making keep/drop
+    # depend on batch neighbors. Scores must be exactly identical however
+    # rows batch.
     langid, _ = models
     texts = ["la casa the house el dia", "the people said they would go home"]
     solo = langid.score_batch(pd.Series(texts))
     tail = langid.score_batch(pd.Series(texts + ["", "ab", None, ""]))
     head = langid.score_batch(pd.Series(["", None] + texts + [""]))
-    assert list(solo["lang"]) == list(tail["lang"][:2]) == list(head["lang"][2:4])
+    odd = langid.score_batch(pd.Series(["abc"] + texts))
+    assert (
+        list(solo["lang"])
+        == list(tail["lang"][:2])
+        == list(head["lang"][2:4])
+        == list(odd["lang"][1:])
+    )
     np.testing.assert_array_equal(solo["conf"].to_numpy(), tail["conf"].to_numpy()[:2])
     np.testing.assert_array_equal(solo["conf"].to_numpy(), head["conf"].to_numpy()[2:4])
+    np.testing.assert_array_equal(solo["conf"].to_numpy(), odd["conf"].to_numpy()[1:])
     for frame in (tail, head):
         und = frame[frame["lang"] == "und"]
         assert (und["conf"] == 0.0).all()

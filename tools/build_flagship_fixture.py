@@ -23,8 +23,9 @@ re-derived — their correctness is covered by the langid/ppl property
 tests and goldens; tests/test_golden_decisions.py guards the fixture
 against silent kernel drift and says when to regenerate).
 
-Deterministic: kernels are pure given the artifact tables, which are
-themselves deterministic given ARTIFACT_VERSION (artifacts_build.py).
+Deterministic: kernels are pure per row given the artifact tables (a
+row scores the same whatever rows share its Arrow batch), and the tables
+are themselves deterministic given ARTIFACT_VERSION (artifacts_build.py).
 Regenerate after ANY artifact/kernel change:
 
     python tools/build_flagship_fixture.py
