@@ -109,6 +109,7 @@ def ngram_jaccard_pairs(
     Guardrail: without ``block_col`` the self-join is a full cartesian, so
     the unblocked form refuses inputs larger than ``allow_unblocked_rows``
     (the check is one cheap count; at table scale you must block)."""
+    _check_lsh_params(n, threshold)
     if block_col is None:
         n_rows = df.count()
         if n_rows > allow_unblocked_rows:
@@ -298,11 +299,12 @@ def sh_jaccard(pairs: DataFrame, sh1: str, sh2: str) -> DataFrame:
 
 
 def _check_lsh_params(
-    n: int, verify_threshold: float = 0.5, max_bucket_size: int | None = None
+    n: int = 1, verify_threshold: float = 0.5, max_bucket_size: int | None = None
 ) -> None:
-    """ValueError for LSH parameters that cannot give a meaningful pair
-    set: no shingles (n < 1), a threshold no Jaccard can or every pair
-    will pass, or a bucket cap that drops every bucket with a pair."""
+    """ValueError for near-dup parameters that cannot give a meaningful
+    pair set: no shingles (n < 1), a threshold no Jaccard can or every
+    pair will pass, or a bucket cap that drops every bucket with a pair.
+    Shared by the LSH, n-gram Jaccard and SimHash operators."""
     if n < 1:
         raise ValueError(f"n={n}: shingle size must be >= 1")
     if not 0 < verify_threshold <= 1:
@@ -875,10 +877,12 @@ def simhash_pairs(
     same window-count trick as minhash_lsh_pairs."""
     if num_chunks is None:
         num_chunks = max_hamming + 1  # classic minimal split
-    if num_chunks <= max_hamming:
+    if not 0 <= max_hamming < num_chunks <= 64:
         raise ValueError(
-            f"pigeonhole needs num_chunks > max_hamming (got {num_chunks} <= {max_hamming})"
+            "pigeonhole needs 0 <= max_hamming < num_chunks <= 64 (at least one bit "
+            f"per chunk); got max_hamming={max_hamming}, num_chunks={num_chunks}"
         )
+    _check_lsh_params(max_bucket_size=max_bucket_size)
     import itertools
 
     m = num_chunks
@@ -977,6 +981,8 @@ def embedding_neardup_pairs(
     one cheap count up front instead of an O(n²) job at table scale."""
     from ..functions.arrays import cosine
 
+    if not -1 <= threshold <= 1:
+        raise ValueError(f"threshold={threshold}: cosine lies in [-1, 1]")
     if block_col is None:
         n_rows = df.count()
         if n_rows > allow_unblocked_rows:

@@ -727,3 +727,49 @@ def test_lsh_api_rejects_bad_parameters(docs, tmp_path, op, kwargs, match):
     with pytest.raises(ValueError, match=match):
         _LSH_OPS[op](docs, path, **kwargs)
     assert not os.path.exists(path)
+
+
+def _vectors(spark):
+    return spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.6, 0.8])], "vec_id long, embedding array<float>"
+    )
+
+
+_NEARDUP_OPS = {
+    "ngram_jaccard": lambda spark, df, **kw: dedup.ngram_jaccard_pairs(df, "doc_id", "text", **kw),
+    "simhash": lambda spark, df, **kw: dedup.simhash_pairs(df, "doc_id", "text", **kw),
+    "embedding": lambda spark, df, **kw: dedup.embedding_neardup_pairs(
+        _vectors(spark), "vec_id", "embedding", **kw
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "op, kwargs, match",
+    [
+        ("ngram_jaccard", {"n": 0}, "shingle size"),
+        ("ngram_jaccard", {"n": -1}, "shingle size"),
+        ("ngram_jaccard", {"threshold": 0.0}, "threshold"),
+        ("ngram_jaccard", {"threshold": -0.1}, "threshold"),
+        ("ngram_jaccard", {"threshold": 1.5}, "threshold"),
+        ("simhash", {"max_hamming": -1}, "max_hamming"),
+        ("simhash", {"max_hamming": -1, "num_chunks": 4}, "max_hamming"),
+        ("simhash", {"max_hamming": 0, "num_chunks": 65}, "num_chunks"),
+        ("simhash", {"max_bucket_size": 1}, "max_bucket_size"),
+        ("simhash", {"max_bucket_size": 0}, "max_bucket_size"),
+        ("embedding", {"threshold": 1.5}, "cosine"),
+        ("embedding", {"threshold": -1.01}, "cosine"),
+    ],
+)
+def test_neardup_api_rejects_bad_parameters(spark, docs, op, kwargs, match):
+    """The n-gram Jaccard, SimHash and embedding near-dup operators refuse
+    parameters that cannot give a meaningful pair set (no shingles, a
+    vacuous or unreachable threshold, a SimHash split the pigeonhole
+    bound cannot hold for, a cap that drops every bucket holding a pair)
+    up front, before any Spark job runs."""
+
+    def call():
+        with pytest.raises(ValueError, match=match):
+            _NEARDUP_OPS[op](spark, docs, **kwargs)
+
+    assert _jobs_started(spark, call) == 0
