@@ -26,9 +26,12 @@ MinHash's features pass and SimHash's bit-packing:
                 bounded by max_bucket_size — no O(n²) anywhere, which is
                 what makes it 100 TB-safe.
 - SimHash:      64-bit token-hash majority vote (pandas UDF), hamming
-                bucket join on (m−h)-chunk combination keys (multi-index
+                buckets on (m−h)-chunk combination keys (multi-index
                 pigeonhole — bucket space tunable via num_chunks) with
                 the same bucket cap.
+
+Both require the cap: _capped_buckets_one_exchange alone drops over-cap
+buckets and collects each remaining bucket's members, over one exchange.
 """
 
 from __future__ import annotations
@@ -299,18 +302,19 @@ def sh_jaccard(pairs: DataFrame, sh1: str, sh2: str) -> DataFrame:
 
 
 def _check_lsh_params(
-    n: int = 1, verify_threshold: float = 0.5, max_bucket_size: int | None = None
+    n: int = 1, verify_threshold: float = 0.5, max_bucket_size: int = 1000
 ) -> None:
     """ValueError for near-dup parameters that cannot give a meaningful
     pair set: no shingles (n < 1), a threshold no Jaccard can or every
-    pair will pass, or a bucket cap that drops every bucket with a pair.
+    pair will pass, or a bucket cap that drops every bucket with a pair
+    or, as ``None``, none (each bucket would collect an unbounded array).
     Shared by the LSH, n-gram Jaccard and SimHash operators."""
     if n < 1:
         raise ValueError(f"n={n}: shingle size must be >= 1")
     if not 0 < verify_threshold <= 1:
         raise ValueError(f"verify_threshold={verify_threshold} must be in (0, 1]")
-    if max_bucket_size is not None and max_bucket_size < 2:
-        raise ValueError(f"max_bucket_size={max_bucket_size} must be None or >= 2")
+    if max_bucket_size is None or max_bucket_size < 2:
+        raise ValueError(f"max_bucket_size={max_bucket_size} must be an int >= 2")
 
 
 def _underpartitioned(df: DataFrame) -> bool:
@@ -395,22 +399,28 @@ def _lsh_features(df: DataFrame, key_col: str, text_col: str, n: int) -> DataFra
     )
 
 
-def _capped_buckets_one_exchange(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
-    """Remove rows whose (keys) group exceeds ``cap`` rows, via
-    count-aggregate → broadcast anti-join (the oversized-group list is
-    tiny by construction), with the bucketed rows shuffled exactly ONCE
-    (guide §2.4: two operations keyed the same way share one exchange):
+def _capped_buckets_one_exchange(
+    df: DataFrame, keys: list[str], cap: int, member: Column
+) -> DataFrame:
+    """(keys…, ks): the ``member`` values of every (keys) bucket with 2
+    to ``cap`` rows, one collect_list array per bucket. Buckets over
+    ``cap`` rows are removed via count-aggregate →
+    broadcast anti-join (the oversized-group list is tiny by
+    construction), with the bucketed rows shuffled exactly ONCE (guide
+    §2.4: two operations keyed the same way share one exchange):
     repartition by ``keys`` up front, so the oversized-bucket
-    count-aggregate and every downstream groupBy(keys) consume the SAME
-    exchange (ReusedExchange) instead of each paying its own shuffle of
-    the banded rows. The broadcast
-    anti-join preserves the streamed side's partitioning, so a
-    following groupBy(keys) plans with no exchange at all.
+    count-aggregate and the member collect consume the SAME exchange
+    (ReusedExchange) instead of each paying its own shuffle of the
+    banded rows. The broadcast anti-join preserves the streamed side's
+    partitioning, so the groupBy(keys) plans with no exchange at all.
 
     r7 A/B at sf1.0 (fresh JVMs, interleaved): the two-exchange shape
     medianed 6.2-6.5s inside the minhash headline query, this shape
-    4.3-4.7s — and the OOM guard is unchanged: over-cap buckets are
-    dropped BEFORE any per-bucket array materializes."""
+    4.3-4.7s — and the OOM guard holds: over-cap buckets are dropped
+    BEFORE any per-bucket array materializes. collect_list, not
+    collect_set: each row is one member of one bucket, so members are
+    distinct and the callers' candidate distinct() absorbs any upstream
+    key dups."""
     df = df.repartition(*keys)
     over = (
         df.groupBy(*keys)
@@ -418,7 +428,12 @@ def _capped_buckets_one_exchange(df: DataFrame, keys: list[str], cap: int) -> Da
         .filter(F.col("_bsz") > cap)
         .drop("_bsz")
     )
-    return df.join(F.broadcast(over), keys, "left_anti")
+    return (
+        df.join(F.broadcast(over), keys, "left_anti")
+        .groupBy(*keys)
+        .agg(F.collect_list(member).alias("ks"))
+        .filter(F.size("ks") >= 2)
+    )
 
 
 def minhash_lsh_bucket_stats(
@@ -426,7 +441,7 @@ def minhash_lsh_bucket_stats(
     key_col: str,
     text_col: str,
     n: int = 3,
-    max_bucket_size: int | None = 1000,
+    max_bucket_size: int = 1000,
 ) -> DataFrame:
     """No-silent-caps accounting for ``minhash_lsh_pairs``: one row with
     the number of buckets and banded rows that the bucket cap drops, the
@@ -453,7 +468,7 @@ def minhash_lsh_pairs(
     text_col: str,
     n: int = 3,
     verify_threshold: float = 0.5,
-    max_bucket_size: int | None = 1000,
+    max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Near-dup candidate pairs via banded MinHash LSH (MINHASH_SLOTS
     hashes in LSH_BANDS bands of LSH_ROWS), verified with exact shingle
@@ -468,29 +483,27 @@ def minhash_lsh_pairs(
 
     Plan: Arrow features stage (band hashes + shingle hashes) → keyed
     exchange → posexplode_outer(bhs) [rows ×LSH_BANDS] →
-    bucket cap → groupBy(band, band_hash) collect_list → double explode
-    (k1 < k2) candidate pairs → verify join back to the precomputed
-    shingle-hash arrays → sh_jaccard (one array_intersect per pair; its
-    Generate keeps the threshold filter out of the join condition) →
-    threshold filter. Pair
-    generation is ONE keyed shuffle: the capped banded rows group into
-    ≤``max_bucket_size``-element key arrays (bounded: ≤8 KB per bucket
-    by construction — with ``max_bucket_size=None`` the grouped path is
-    unsafe, so pair generation falls back to the bucket self-join
-    instead) and the k² pair explode runs inside the same stage
-    — measured 2× faster than the former two-sided self-join at sf0.1
-    (which shuffled the banded rows twice and built a join hash table
-    per bucket), with identical output. Every stage is bounded by
-    bucket sizes, not table size — which the two scale guards below
-    make actually true:
+    bucket cap + groupBy(band, band_hash) collect_list
+    (_capped_buckets_one_exchange) → double explode (k1 < k2) candidate
+    pairs → verify join back to the precomputed shingle-hash arrays →
+    sh_jaccard (one array_intersect per pair; its Generate keeps the
+    threshold filter out of the join condition) → threshold filter.
+    Pair generation is ONE keyed shuffle: the capped banded rows group
+    into ≤``max_bucket_size``-element key arrays (bounded: ≤8 KB per
+    bucket by construction, which is why the cap is required) and the
+    k² pair explode runs inside the same stage — measured 2× faster
+    than a two-sided bucket self-join at sf0.1 (which shuffled the
+    banded rows twice and built a join hash table per bucket), with
+    identical output. Every stage is bounded by bucket sizes, not table
+    size — which the two scale guards below make actually true:
 
     - texts with NO n-shingles (length < n) are excluded up front; they
       would otherwise all share one sentinel signature and form a single
       O(m²) bucket in every band. Short-text exact duplicates belong to
       ``exact_dedup``, not LSH (jaccard between empty shingle sets is 0
       by definition here anyway).
-    - buckets larger than ``max_bucket_size`` are DROPPED before the
-      self-join: a map-side-partial count of (band, bh) finds the
+    - buckets larger than ``max_bucket_size`` are DROPPED before pair
+      generation: a map-side-partial count of (band, bh) finds the
       oversized buckets (a tiny set by definition — only degenerate
       content produces them) which is then BROADCAST anti-joined against
       the banded rows, so the cap costs no extra sort or full-row
@@ -502,58 +515,24 @@ def minhash_lsh_pairs(
     _check_lsh_params(n, verify_threshold, max_bucket_size)
     base = _lsh_features(df, key_col, text_col, n)
 
-    banded = _lsh_banded_bhs(base)
-
-    if max_bucket_size is not None:
-        # ONE exchange serves the cap count, the anti-join and the
-        # pair-generation groupBy (guide §2.4 — see
-        # _capped_buckets_one_exchange; was two shuffles of the banded
-        # rows before r7)
-        banded = _capped_buckets_one_exchange(
-            banded, ["band", "bh"], max_bucket_size
-        )
-        # pair generation: zero further shuffles — the capped rows are
-        # already partitioned by (band, bh), so the groupBy is
-        # exchange-free; arrays bounded by the cap above; nested explode
-        # stays whole-stage-codegen (a transform()-based combination
-        # build would run interpreted — SNIPPETS.md HOF note). The
-        # grouped path REQUIRES the cap: each bucket materializes one
-        # array row. collect_list, not collect_set: each doc contributes
-        # exactly one (k, band, bh) row per band, so bucket members are
-        # distinct by construction (and were duplicates ever fed in, the
-        # candidate distinct() below absorbs them) — list skips the
-        # per-row set dedup cost.
-        grouped = (
-            banded.groupBy("band", "bh")
-            .agg(F.collect_list("k").alias("ks"))
-            .filter(F.size("ks") >= 2)
-        )
-        # the pair dedup and the first verify join share ONE exchange:
-        # hashpartitioning(k1) clusters (k1, k2) — partition keys are a
-        # subset of the distinct keys — so distinct() plans with no
-        # exchange of its own, and the k1 verify join below reuses the
-        # same partitioning for its streamed side (guide §2.4)
-        cand = (
-            grouped.select("ks", F.explode("ks").alias("k1"))
-            .select("k1", F.explode("ks").alias("k2"))
-            .filter(F.col("k1") < F.col("k2"))
-            .select("k1", "k2")
-            .repartition(F.col("k1"))
-            .distinct()
-        )
-    else:
-        # uncapped: the self-join path — slower (two shuffles of the
-        # banded rows + per-bucket hash build) but degrades smoothly on a
-        # degenerate bucket instead of collecting one unbounded array
-        # into a single executor row
-        lhs = banded.select("band", "bh", F.col("k").alias("k1"))
-        rhs = banded.select("band", "bh", F.col("k").alias("k2"))
-        cand = (
-            lhs.join(rhs, ["band", "bh"])
-            .filter(F.col("k1") < F.col("k2"))
-            .select("k1", "k2")
-            .distinct()
-        )
+    # the nested explode stays whole-stage-codegen (a transform()-based
+    # combination build would run interpreted — SNIPPETS.md HOF note)
+    grouped = _capped_buckets_one_exchange(
+        _lsh_banded_bhs(base), ["band", "bh"], max_bucket_size, F.col("k")
+    )
+    # the pair dedup and the first verify join share ONE exchange:
+    # hashpartitioning(k1) clusters (k1, k2) — partition keys are a
+    # subset of the distinct keys — so distinct() plans with no
+    # exchange of its own, and the k1 verify join below reuses the
+    # same partitioning for its streamed side (guide §2.4)
+    cand = (
+        grouped.select("ks", F.explode("ks").alias("k1"))
+        .select("k1", F.explode("ks").alias("k2"))
+        .filter(F.col("k1") < F.col("k2"))
+        .select("k1", "k2")
+        .repartition(F.col("k1"))
+        .distinct()
+    )
 
     # verify: join the candidates back to the PRECOMPUTED distinct
     # shingle-hash arrays and compute exact Jaccard as JVM set ops —
@@ -732,7 +711,7 @@ def lsh_index_query(
     path: str,
     n: int = 3,
     verify_threshold: float = 0.5,
-    max_bucket_size: int | None = 1000,
+    max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Near-dup pairs (k_new, k_old, jaccard) between a new batch and
     the indexed corpus — the corpus is never re-signed or re-shingled
@@ -751,29 +730,27 @@ def lsh_index_query(
     new_base = _lsh_features(new_df, key_col, text_col, n)
     new_banded = _lsh_banded_bhs(new_base)
     idx = spark.read.parquet(path + "/banded")
-
-    if max_bucket_size is not None:
-        idx_counts = (
-            spark.read.parquet(path + "/bucket_counts")
-            .groupBy("band", "bh")
-            .agg(F.sum("cnt").alias("cnt_old"))
+    idx_counts = (
+        spark.read.parquet(path + "/bucket_counts")
+        .groupBy("band", "bh")
+        .agg(F.sum("cnt").alias("cnt_old"))
+    )
+    new_counts = new_banded.groupBy("band", "bh").agg(
+        F.count(F.lit(1)).alias("cnt_new")
+    )
+    over = (
+        new_counts.join(idx_counts, ["band", "bh"], "left")
+        .filter(
+            F.coalesce(F.col("cnt_old"), F.lit(0)) + F.col("cnt_new")
+            > max_bucket_size
         )
-        new_counts = new_banded.groupBy("band", "bh").agg(
-            F.count(F.lit(1)).alias("cnt_new")
-        )
-        over = (
-            new_counts.join(idx_counts, ["band", "bh"], "left")
-            .filter(
-                F.coalesce(F.col("cnt_old"), F.lit(0)) + F.col("cnt_new")
-                > max_bucket_size
-            )
-            .select("band", "bh")
-        )
-        # only buckets the BATCH touches can produce new pairs, so the
-        # oversized list stays batch-sized (broadcastable) even when the
-        # index holds billions of rows
-        new_banded = new_banded.join(F.broadcast(over), ["band", "bh"], "left_anti")
-        idx = idx.join(F.broadcast(over), ["band", "bh"], "left_anti")
+        .select("band", "bh")
+    )
+    # only buckets the BATCH touches can produce new pairs, so the
+    # oversized list stays batch-sized (broadcastable) even when the
+    # index holds billions of rows
+    new_banded = new_banded.join(F.broadcast(over), ["band", "bh"], "left_anti")
+    idx = idx.join(F.broadcast(over), ["band", "bh"], "left_anti")
 
     cand = (
         new_banded.withColumnRenamed("k", "k_new")
@@ -873,8 +850,8 @@ def simhash_pairs(
     only the candidate volume changes.
 
     Degenerate buckets (identical boilerplate ⇒ identical simhash) are
-    additionally capped at ``max_bucket_size`` rows, same rationale and
-    same window-count trick as minhash_lsh_pairs."""
+    capped at ``max_bucket_size`` rows (required), collected as (k, sh)
+    members by the same _capped_buckets_one_exchange as minhash_lsh_pairs."""
     if num_chunks is None:
         num_chunks = max_hamming + 1  # classic minimal split
     if not 0 <= max_hamming < num_chunks <= 64:
@@ -910,51 +887,21 @@ def simhash_pairs(
         ).alias("cc"),
     ).select("k", "sh", "cc.combo", "cc.bv")
 
-    if max_bucket_size is not None:
-        # cap + pair generation over ONE exchange on (combo, bv) — the
-        # count-agg, anti-join and grouped collect all consume the same
-        # repartition (see _capped_buckets_one_exchange); capped buckets
-        # collect into ≤max_bucket_size struct arrays, pairs explode
-        # in-stage (was a two-sided self-join = two shuffles of the
-        # bucketed rows plus a per-bucket hash build). Requires the cap
-        # — one array row per bucket. collect_list: one row per doc per
-        # combo by construction, so members are already distinct and the
-        # candidate distinct() below absorbs any upstream key dups.
-        buckets = _capped_buckets_one_exchange(
-            buckets, ["combo", "bv"], max_bucket_size
+    grouped = _capped_buckets_one_exchange(
+        buckets, ["combo", "bv"], max_bucket_size, F.struct("k", "sh")
+    )
+    cand = (
+        grouped.select("ks", F.explode("ks").alias("a"))
+        .select("a", F.explode("ks").alias("b"))
+        .filter(F.col("a.k") < F.col("b.k"))
+        .select(
+            F.col("a.k").alias("k1"),
+            F.col("b.k").alias("k2"),
+            F.col("a.sh").alias("sh1"),
+            F.col("b.sh").alias("sh2"),
         )
-        grouped = (
-            buckets.groupBy("combo", "bv")
-            .agg(F.collect_list(F.struct(F.col("k"), F.col("sh"))).alias("ks"))
-            .filter(F.size("ks") >= 2)
-        )
-        cand = (
-            grouped.select("ks", F.explode("ks").alias("a"))
-            .select("a", F.explode("ks").alias("b"))
-            .filter(F.col("a.k") < F.col("b.k"))
-            .select(
-                F.col("a.k").alias("k1"),
-                F.col("b.k").alias("k2"),
-                F.col("a.sh").alias("sh1"),
-                F.col("b.sh").alias("sh2"),
-            )
-            .distinct()
-        )
-    else:
-        # uncapped fallback: self-join degrades per-bucket without a
-        # single unbounded collected array (see minhash_lsh_pairs)
-        lhs = buckets.select(
-            "combo", "bv", F.col("k").alias("k1"), F.col("sh").alias("sh1")
-        )
-        rhs = buckets.select(
-            "combo", "bv", F.col("k").alias("k2"), F.col("sh").alias("sh2")
-        )
-        cand = (
-            lhs.join(rhs, ["combo", "bv"])
-            .filter(F.col("k1") < F.col("k2"))
-            .select("k1", "k2", "sh1", "sh2")
-            .distinct()
-        )
+        .distinct()
+    )
     hamming = F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2")))
     return cand.select("k1", "k2", hamming.alias("hamming")).filter(
         F.col("hamming") <= max_hamming

@@ -177,18 +177,19 @@ def test_lsh_short_texts_excluded_and_buckets_capped(spark, docs):
     assert stats["dropped_buckets"] >= 1
     assert stats["largest_bucket"] == 2000
     assert stats["short_text_rows"] == 400
-    # ...and the cap must not change results on normal (non-degenerate) data
+    # ...and the cap must not change results on normal (non-degenerate)
+    # data: no bucket can exceed a cap of the row count
     capped = {
         (r["k1"], r["k2"])
         for r in dedup.minhash_lsh_pairs(docs, "doc_id", "text", verify_threshold=0.8).collect()
     }
-    uncapped = {
+    no_bucket_over_cap = {
         (r["k1"], r["k2"])
         for r in dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", verify_threshold=0.8, max_bucket_size=None
+            docs, "doc_id", "text", verify_threshold=0.8, max_bucket_size=docs.count()
         ).collect()
     }
-    assert capped == uncapped
+    assert capped == no_bucket_over_cap
 
 
 def test_simhash_multiindex_pigeonhole_equivalence(spark):
@@ -676,14 +677,11 @@ def test_xxhash64_longs_matches_spark(spark):
 
 def test_lsh_operators_are_lazy(spark, docs, tmp_path):
     """Calling the LSH pair operators builds a plan and runs nothing:
-    minhash_lsh_pairs starts no Spark job (capped or not), and
-    lsh_index_query starts only the schema reads of the index's three
+    minhash_lsh_pairs starts no Spark job, and lsh_index_query starts only the schema reads of the index's three
     parquet outputs — the same jobs as reading them directly."""
     idx = str(tmp_path / "idx")
     dedup.lsh_index_write(docs, "doc_id", "text", idx)
-    for cap in (1000, None):
-        call = lambda: dedup.minhash_lsh_pairs(docs, "doc_id", "text", max_bucket_size=cap)
-        assert _jobs_started(spark, call) == 0
+    assert _jobs_started(spark, lambda: dedup.minhash_lsh_pairs(docs, "doc_id", "text")) == 0
     reads = _jobs_started(
         spark,
         lambda: [spark.read.parquet(f"{idx}/{p}") for p in ("banded", "bucket_counts", "texts")],
@@ -716,13 +714,18 @@ _LSH_OPS = {
         (op, {"max_bucket_size": m}, "max_bucket_size")
         for op in ("pairs", "stats", "index_query")
         for m in (1, 0)
+    ]
+    + [
+        (op, {"max_bucket_size": None}, "max_bucket_size")
+        for op in ("pairs", "stats", "index_query")
     ],
 )
 def test_lsh_api_rejects_bad_parameters(docs, tmp_path, op, kwargs, match):
     """The public LSH operators refuse parameters that cannot give a
     meaningful pair set (no shingles, an unreachable or vacuous verify
-    threshold, a cap that drops every bucket holding a pair) up front,
-    before any Spark job runs or any index file is written."""
+    threshold, a cap that drops every bucket holding a pair or no cap
+    at all) up front, before any Spark job runs or any index file is
+    written."""
     path = str(tmp_path / "idx")
     with pytest.raises(ValueError, match=match):
         _LSH_OPS[op](docs, path, **kwargs)
@@ -759,14 +762,15 @@ _NEARDUP_OPS = {
         ("simhash", {"max_bucket_size": 0}, "max_bucket_size"),
         ("embedding", {"threshold": 1.5}, "cosine"),
         ("embedding", {"threshold": -1.01}, "cosine"),
+        ("simhash", {"max_bucket_size": None}, "max_bucket_size"),
     ],
 )
 def test_neardup_api_rejects_bad_parameters(spark, docs, op, kwargs, match):
     """The n-gram Jaccard, SimHash and embedding near-dup operators refuse
     parameters that cannot give a meaningful pair set (no shingles, a
     vacuous or unreachable threshold, a SimHash split the pigeonhole
-    bound cannot hold for, a cap that drops every bucket holding a pair)
-    up front, before any Spark job runs."""
+    bound cannot hold for, a cap that drops every bucket holding a pair
+    or no cap at all) up front, before any Spark job runs."""
 
     def call():
         with pytest.raises(ValueError, match=match):

@@ -235,8 +235,8 @@ def test_stream_interval_join_no_cartesian(spark):
 
 @pytest.fixture(scope="module")
 def lsh_executed_plans(spark, tmp_path_factory):
-    """Final executed plans of minhash_lsh_pairs (capped and uncapped)
-    and lsh_index_query, read from the frames that were collected:
+    """Final executed plans of minhash_lsh_pairs and lsh_index_query,
+    read from the frames that were collected:
     ``.count()`` plans a different query, and an adaptive plan that has
     not run shows no exchange reuse yet."""
     from multi_task_offensive_language_detection_spark.operators import dedup
@@ -250,7 +250,6 @@ def lsh_executed_plans(spark, tmp_path_factory):
     plans = {}
     for name, out in (
         ("pairs", dedup.minhash_lsh_pairs(df, "doc_id", "text")),
-        ("pairs_uncapped", dedup.minhash_lsh_pairs(df, "doc_id", "text", max_bucket_size=None)),
         ("index_query", dedup.lsh_index_query(df.filter("doc_id >= 30"), "doc_id", "text", idx)),
     ):
         assert out.collect(), name
