@@ -870,7 +870,11 @@ def simhash_pairs(
         return F.shiftrightunsigned(F.col("sh"), lo).bitwiseAND(F.lit((1 << width) - 1))
 
     combos = list(itertools.combinations(range(m), m - max_hamming))
-    h = df.select(F.col(key_col).alias("k"), simhash64_udf(F.col(text_col)).alias("sh"))
+    # a NULL key never forms a pair (k1 < k2 is NULL), so it must not
+    # count toward a bucket's cap either (as in _lsh_base)
+    h = df.filter(F.col(key_col).isNotNull()).select(
+        F.col(key_col).alias("k"), simhash64_udf(F.col(text_col)).alias("sh")
+    )
     buckets = h.select(
         "k",
         "sh",

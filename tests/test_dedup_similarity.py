@@ -586,10 +586,11 @@ def test_lsh_index_write_releases_cache_on_failed_write(spark, docs, tmp_path):
 
 def test_lsh_null_keys_do_not_count_toward_bucket_cap(spark, tmp_path):
     """A NULL key can never form a pair (k1 < k2 is NULL), so it leaves
-    the LSH path before banding and cannot cost real pairs their recall
-    through the bucket cap: three identical texts keyed 1, 2 and NULL
-    under max_bucket_size=2 give the pair (1, 2) and no dropped bucket,
-    and the incremental index applies the same rule."""
+    the LSH and SimHash paths before bucketing and cannot cost real
+    pairs their recall through the bucket cap: three identical texts
+    keyed 1, 2 and NULL under max_bucket_size=2 give the pair (1, 2) and
+    no dropped bucket, and the incremental index and simhash_pairs apply
+    the same rule."""
     text = "the quick brown fox jumps over the lazy dog"
     df = spark.createDataFrame(
         [(1, text), (2, text), (None, text)], "doc_id long, text string"
@@ -606,6 +607,8 @@ def test_lsh_null_keys_do_not_count_toward_bucket_cap(spark, tmp_path):
         df.filter("doc_id = 2"), "doc_id", "text", idx, max_bucket_size=2
     )
     assert {(r["k_new"], r["k_old"]) for r in got.collect()} == {(2, 1)}
+    sim = dedup.simhash_pairs(df, "doc_id", "text", max_bucket_size=2)
+    assert {(r["k1"], r["k2"]) for r in sim.collect()} == {(1, 2)}
 
 
 def _jobs_started(spark, fn) -> int:
