@@ -273,6 +273,23 @@ VAD_RESULT = T.StructType(
 )
 
 
+def _speech_frames(pcm, s: int, frame_ms: int, energy_thresh: float):
+    """(flen, speech): the frame length in samples and the per-frame
+    speech mask of non-empty ``pcm`` at ``s`` Hz — fixed ``frame_ms``
+    frames, a frame is speech when its mean square exceeds
+    ``energy_thresh``, and a trailing partial frame's mean is over its
+    real length. The one framing vad_stats_udf and trim_silence share,
+    so the trim cannot drift from the VAD's frame classification."""
+    flen = max(int(s * frame_ms / 1000), 1)
+    k = -(-len(pcm) // flen)  # ceil
+    pad = np.zeros(k * flen)
+    pad[: len(pcm)] = pcm
+    sq = (pad * pad).reshape(k, flen).sum(axis=1)
+    lens = np.full(k, flen, dtype=np.float64)
+    lens[-1] = len(pcm) - flen * (k - 1)
+    return flen, (sq / lens) > energy_thresh
+
+
 def vad_stats_udf(frame_ms: int = 10, energy_thresh: float = 1e-6):
     """(bytes, codec, sr_hz) → energy-VAD struct: frame the decoded PCM
     into fixed ``frame_ms`` windows, mark a frame speech when its mean
@@ -309,17 +326,9 @@ def vad_stats_udf(frame_ms: int = 10, energy_thresh: float = 1e-6):
                     continue
                 if len(pcm) == 0:
                     continue
-                flen = max(int(s * frame_ms / 1000), 1)
-                k = -(-len(pcm) // flen)  # ceil
-                pad = np.zeros(k * flen)
-                pad[: len(pcm)] = pcm
-                sq = (pad * pad).reshape(k, flen).sum(axis=1)
-                # per-frame mean over the REAL frame length (last partial)
-                lens = np.full(k, flen, dtype=np.float64)
-                lens[-1] = len(pcm) - flen * (k - 1)
-                speech = (sq / lens) > energy_thresh
+                flen, speech = _speech_frames(pcm, s, frame_ms, energy_thresh)
                 ok[i] = True
-                nf[i] = k
+                nf[i] = k = len(speech)
                 nsp[i] = int(speech.sum())
                 ratio[i] = nsp[i] / k
                 if nsp[i]:
@@ -596,19 +605,9 @@ TRIM_RESULT = T.StructType(
 
 
 def _speech_bounds(pcm, s: int, frame_ms: int, energy_thresh: float):
-    """[start_sample, end_sample) of the speech span under the SAME
-    framing rule as vad_stats_udf (fixed frames, last partial's mean
-    square over its real length), or None when no frame is speech.
-    Kept as a separate helper so trim_silence cannot drift from the
-    VAD's frame classification."""
-    flen = max(int(s * frame_ms / 1000), 1)
-    k = -(-len(pcm) // flen)  # ceil
-    pad = np.zeros(k * flen)
-    pad[: len(pcm)] = pcm
-    sq = (pad * pad).reshape(k, flen).sum(axis=1)
-    lens = np.full(k, flen, dtype=np.float64)
-    lens[-1] = len(pcm) - flen * (k - 1)
-    speech = (sq / lens) > energy_thresh
+    """[start_sample, end_sample) of the speech span under the VAD's
+    framing (_speech_frames), or None when no frame is speech."""
+    flen, speech = _speech_frames(pcm, s, frame_ms, energy_thresh)
     if not speech.any():
         return None
     idx = np.flatnonzero(speech)

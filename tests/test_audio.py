@@ -306,11 +306,14 @@ def test_trim_silence_property_vs_independent_reference(spark):
     reference: for random PCM with random silent padding, recompute the
     speech span with a plain-Python frame loop (no shared code with
     _speech_bounds) and require the trimmed bytes to be exactly the
-    int16 slice of the original payload between those bounds."""
+    int16 slice of the original payload between those bounds. The VAD
+    stats of the same clips must name the same span: lead_trim_ms is
+    the trim's cut_lead_ms and tail_keep_ms its cut_lead_ms + dur_ms."""
     import numpy as np
 
     from multi_task_offensive_language_detection_spark.operators.audio import (
         trim_clips,
+        with_vad_stats,
     )
 
     rng = np.random.default_rng(1234)
@@ -343,6 +346,11 @@ def test_trim_silence_property_vs_independent_reference(spark):
             ref[cid] = None
     df = spark.createDataFrame(rows, "clip_id string, bytes binary, codec string, sr_hz int")
     out = {r["clip_id"]: r for r in trim_clips(df).select("clip_id", "trimmed.*").collect()}
+    vad = {r["clip_id"]: r["vad"] for r in with_vad_stats(df).select("clip_id", "vad").collect()}
     for cid, expect in ref.items():
         got = out[cid]["bytes"]
         assert (bytes(got) if got is not None else None) == expect, cid
+        if expect is not None:
+            assert vad[cid]["lead_trim_ms"] == out[cid]["cut_lead_ms"], cid
+            span_end = out[cid]["cut_lead_ms"] + out[cid]["dur_ms"]
+            assert abs(vad[cid]["tail_keep_ms"] - span_end) <= 1e-9, cid
