@@ -1457,7 +1457,7 @@ def pipeline_documents(spark, sf):
 
     d = _t(spark, sf, "documents").withColumnRenamed("text", "transcript")
     d = salted_repartition(d, spark.sparkContext.defaultParallelism, key="doc_id")
-    scored = score_transcripts(d, "transcript", build_all(), id_col="doc_id")
+    scored = score_transcripts(d, "transcript", build_all())
     return scored.select(
         "doc_id", "keep", "label_a", "drop_reason", "scrubbed_transcript"
     )
@@ -1666,7 +1666,7 @@ def pipeline_documents_full(spark, sf):
     from .plans.pipeline import score_transcripts
 
     d = _t(spark, sf, "documents").withColumnRenamed("text", "transcript")
-    scored = score_transcripts(d, "transcript", build_all(), id_col="doc_id")
+    scored = score_transcripts(d, "transcript", build_all())
     return scored.select(
         "doc_id",
         "drop_reason",

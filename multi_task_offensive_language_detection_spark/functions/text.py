@@ -135,27 +135,3 @@ def word_flag(col: Column, words: tuple[str, ...]) -> Column:
     """
     pat = r"\b(" + "|".join(words) + r")\b"
     return col.rlike(pat)
-
-
-def word_hits(col: Column, words: tuple[str, ...]) -> Column:
-    """Count of whole-word lexicon hits in ``col`` (already lowercased)."""
-    pat = r"\b(" + "|".join(words) + r")\b"
-    return F.size(F.regexp_extract_all(col, F.lit(pat), F.lit(0)))
-
-
-def tokens_of_normalized(norm: Column) -> Column:
-    """Token array of ws-collapsed text — share this single split across
-    token_count / rep_tok_ratio / lexicon membership instead of paying a
-    regex split per metric (SURVEY §4: widen codegen, don't repeat work)."""
-    return F.split(norm, " ")
-
-
-def token_count_from(toks: Column, norm: Column) -> Column:
-    return F.when(F.length(norm) == 0, F.lit(0)).otherwise(F.size(toks))
-
-
-def rep_tok_ratio_from(toks: Column, norm: Column) -> Column:
-    return F.when(F.length(norm) == 0, F.lit(0.0)).otherwise(
-        F.lit(1.0)
-        - F.size(F.array_distinct(toks)).cast("double") / F.size(toks).cast("double")
-    )

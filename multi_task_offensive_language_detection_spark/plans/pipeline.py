@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..artifacts_build import build_all
-from ..functions import text as FT
 from ..functions.scrub import scrub_edit_count, scrub_pii, scrub_profanity
 from ..lexicons import THRESHOLDS
 from ..operators import taxonomy
@@ -51,14 +50,13 @@ OUTPUT_COLS = [
 ]
 
 
-def salted_repartition(df: DataFrame, num_partitions: int, salt_buckets: int | None = None, key: str = "clip_id") -> DataFrame:
+def salted_repartition(df: DataFrame, num_partitions: int, key: str = "clip_id") -> DataFrame:
     """X1 — defeat transcript-length skew by hashing the unique key into
-    ``salt_buckets`` uniform salts (≈4× partitions) and shuffling on the
-    salt. AQE handles skewed JOINs; this equalizes map-stage bytes/task,
-    which AQE does not (SURVEY.md §4.3)."""
-    ns = salt_buckets or num_partitions * 4
+    4× ``num_partitions`` uniform salts and shuffling on the salt. AQE
+    handles skewed JOINs; this equalizes map-stage bytes/task, which AQE
+    does not (SURVEY.md §4.3)."""
     return df.repartition(
-        num_partitions, F.pmod(F.xxhash64(F.col(key)), F.lit(ns))
+        num_partitions, F.pmod(F.xxhash64(F.col(key)), F.lit(num_partitions * 4))
     )
 
 
@@ -66,7 +64,6 @@ def score_transcripts(
     df: DataFrame,
     text_col: str = "transcript",
     artifacts: dict[str, str] | None = None,
-    id_col: str = "clip_id",
     dur_ms_col: str | None = None,
     th: dict | None = None,
 ) -> DataFrame:

@@ -101,7 +101,7 @@ def test_flagship_fixture_matches_live_kernels(spark):
         d.agg(F.sum(F.col("doc_id") * F.col("n_chars"))).collect()[0][0]
     )
     live = (
-        score_transcripts(d, "transcript", build_all(), id_col="doc_id")
+        score_transcripts(d, "transcript", build_all())
         .select(
             "doc_id",
             F.col("scores.langid_lang").alias("lang"),

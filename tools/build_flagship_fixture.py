@@ -71,7 +71,7 @@ def build(spark=None, sf_dirs=None, out: str = OUT) -> str:
         sig = int(
             d.agg(F.sum(F.col("doc_id") * F.col("n_chars"))).collect()[0][0]
         )
-        scored = score_transcripts(d, "transcript", arts, id_col="doc_id")
+        scored = score_transcripts(d, "transcript", arts)
         parts.append(
             scored.select(
                 F.lit(sig).alias("corpus_sig"),
