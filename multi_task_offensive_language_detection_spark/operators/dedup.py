@@ -306,8 +306,8 @@ def _check_lsh_params(
 ) -> None:
     """ValueError for near-dup parameters that cannot give a meaningful
     pair set: no shingles (n < 1), a threshold no Jaccard can or every
-    pair will pass, or a bucket cap that drops every bucket with a pair
-    or, as ``None``, none (each bucket would collect an unbounded array).
+    pair will pass, a bucket cap that drops every bucket with a pair, or
+    no cap (``None``: each bucket would collect an unbounded array).
     Shared by the LSH, n-gram Jaccard and SimHash operators."""
     if n < 1:
         raise ValueError(f"n={n}: shingle size must be >= 1")
@@ -404,10 +404,10 @@ def _capped_buckets_one_exchange(
 ) -> DataFrame:
     """(keys…, ks): the ``member`` values of every (keys) bucket with 2
     to ``cap`` rows, one collect_list array per bucket. Buckets over
-    ``cap`` rows are removed via count-aggregate →
-    broadcast anti-join (the oversized-group list is tiny by
-    construction), with the bucketed rows shuffled exactly ONCE (guide
-    §2.4: two operations keyed the same way share one exchange):
+    ``cap`` rows are removed via count-aggregate → broadcast anti-join
+    (the oversized-group list is tiny by construction), with the
+    bucketed rows shuffled exactly ONCE (guide §2.4: two operations
+    keyed the same way share one exchange):
     repartition by ``keys`` up front, so the oversized-bucket
     count-aggregate and the member collect consume the SAME exchange
     (ReusedExchange) instead of each paying its own shuffle of the

@@ -680,8 +680,9 @@ def test_xxhash64_longs_matches_spark(spark):
 
 def test_lsh_operators_are_lazy(spark, docs, tmp_path):
     """Calling the LSH pair operators builds a plan and runs nothing:
-    minhash_lsh_pairs starts no Spark job, and lsh_index_query starts only the schema reads of the index's three
-    parquet outputs — the same jobs as reading them directly."""
+    minhash_lsh_pairs starts no Spark job, and lsh_index_query starts
+    only the schema reads of the index's three parquet outputs — the
+    same jobs as reading them directly."""
     idx = str(tmp_path / "idx")
     dedup.lsh_index_write(docs, "doc_id", "text", idx)
     assert _jobs_started(spark, lambda: dedup.minhash_lsh_pairs(docs, "doc_id", "text")) == 0

@@ -236,9 +236,9 @@ def test_stream_interval_join_no_cartesian(spark):
 @pytest.fixture(scope="module")
 def lsh_executed_plans(spark, tmp_path_factory):
     """Final executed plans of minhash_lsh_pairs and lsh_index_query,
-    read from the frames that were collected:
-    ``.count()`` plans a different query, and an adaptive plan that has
-    not run shows no exchange reuse yet."""
+    read from the frames that were collected: ``.count()`` plans a
+    different query, and an adaptive plan that has not run shows no
+    exchange reuse yet."""
     from multi_task_offensive_language_detection_spark.operators import dedup
 
     df = spark.createDataFrame(
