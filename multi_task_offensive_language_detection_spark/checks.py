@@ -56,12 +56,8 @@ def _t(spark: SparkSession, sf: str, name: str) -> DataFrame:
 #: (tools/build_pinned_oracles.py; corpus_sig-sliced like the flagship
 #: fixture, defined up here because their oracles interpolate the paths
 #: at decoration time)
-_FIXTURE_DATA_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tests",
-    "fixtures",
-    "data",
-)
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_FIXTURE_DATA_DIR = os.path.join(_REPO_ROOT, "tests", "fixtures", "data")
 _HASHTAG_FIXTURE = os.path.join(_FIXTURE_DATA_DIR, "hashtag_segments.parquet")
 _PCA_FIXTURE = os.path.join(_FIXTURE_DATA_DIR, "pca_projections.parquet")
 
@@ -899,9 +895,6 @@ def doc_fingerprint(spark, sf):
     return d.select("doc_id", quality.doc_fingerprint(F.col("text")).alias("fingerprint"))
 
 
-_QUALITY_SQL = None  # built below
-
-
 def _quality_sql() -> str:
     sw_pat = r"\b(" + "|".join(STOPWORDS["en"]) + r")\b"
     return f"""
@@ -1534,13 +1527,7 @@ def _rules_pipeline_sql() -> str:
 #: committed side table of the fused UDF's non-SQL kernel outputs
 #: (tools/build_flagship_fixture.py; keyed by (corpus_sig, doc_id) so one
 #: static SQL string serves every scale factor)
-_FLAGSHIP_FIXTURE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tests",
-    "fixtures",
-    "data",
-    "flagship_scores.parquet",
-)
+_FLAGSHIP_FIXTURE = os.path.join(_FIXTURE_DATA_DIR, "flagship_scores.parquet")
 
 
 def _full_pipeline_sql() -> str:
@@ -2842,7 +2829,7 @@ def correctness_history(repo_root: str | None = None) -> dict[str, int]:
     import json as _json
     import re as _re
 
-    root = repo_root or os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    root = repo_root or _REPO_ROOT
     last: dict[str, int] = {}
     for path in sorted(_glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
@@ -2871,7 +2858,7 @@ def correctness_red(repo_root: str | None = None) -> set[str]:
     import json as _json
     import re as _re
 
-    root = repo_root or os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    root = repo_root or _REPO_ROOT
     latest: dict[str, tuple[int, dict]] = {}
     for path in sorted(_glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
@@ -2904,9 +2891,13 @@ def correctness_red(repo_root: str | None = None) -> set[str]:
 def oracle_fingerprint(sql: str) -> str:
     """Whitespace-insensitive fingerprint of an oracle SQL string, used
     to detect 'the oracle changed after its last driver row' — such a
-    key needs driver re-confirmation just like a stale one."""
+    key needs driver re-confirmation just like a stale one. The checkout
+    path is replaced by a fixed token first: oracles that read a pinned
+    fixture embed its absolute path, and a copy of the repo at another
+    path must hash the same."""
     import hashlib as _hashlib
 
+    sql = sql.replace(_REPO_ROOT, "<repo>")
     return _hashlib.sha256(" ".join(sql.split()).encode()).hexdigest()[:16]
 
 

@@ -21,7 +21,6 @@ import numpy as np
 # FNV-1a-style constants; fixed forever (artifact compatibility).
 _H_INIT = np.uint64(0xCBF29CE484222325)
 _H_MULT = np.uint64(0x100000001B3)
-MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 
 def hash_bytes_u64(data: bytes) -> int:

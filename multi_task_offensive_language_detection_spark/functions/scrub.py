@@ -82,11 +82,6 @@ def scrub_profanity(col: Column, words: tuple[str, ...] = PROFANITY) -> Column:
     return F.regexp_replace(col, _profanity_re(words), "<PROFANITY>")
 
 
-def scrub_all(col: Column, words: tuple[str, ...] = PROFANITY) -> Column:
-    """Full scrub: PII chain then profanity replacement."""
-    return scrub_profanity(scrub_pii(col), words)
-
-
 def scrub_edit_count(scrubbed: Column) -> Column:
     """n_scrub_edits — number of placeholder tokens in the scrubbed text.
 

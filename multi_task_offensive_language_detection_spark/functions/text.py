@@ -2,9 +2,12 @@
 
 Everything here is a pure ``Column`` expression — JVM-side, codegen'd,
 Catalyst-collapsible (CollapseProject fuses the regexp_replace chain into
-one projection). This mirrors the reference's pandas preprocessing chain
-([R] ref:data.py: lowercase, URL→'URL', @mention→'@USER', cap repeated
-@USER runs at 3 — see SURVEY.md F1-F3) but stays fully distributed.
+one projection). It covers the reference's pandas preprocessing steps
+([R] ref:data.py) that the filter and the driver keys use: whitespace
+collapse (F1), URL→'URL' (F2), the @mention pattern the scrub chain and
+the masking key replace with '@USER', tokenizing and truncation (F6-F7)
+and the caps/repetition scores (F8-F10). The reference's cap of repeated
+@USER runs at 3 (F3) has no caller here and is not implemented.
 """
 
 from __future__ import annotations
@@ -21,12 +24,6 @@ def mask_urls(col: Column) -> Column:
     return F.regexp_replace(col, URL_RE, "URL")
 
 
-def mask_mentions(col: Column) -> Column:
-    """F3 — replace @mentions with ``@USER``; collapse runs >3 to 3."""
-    masked = F.regexp_replace(col, MENTION_RE, "@USER")
-    return F.regexp_replace(masked, r"(@USER ){3,}@USER", "@USER @USER @USER")
-
-
 def normalize_ws(col: Column) -> Column:
     """F1 — collapse whitespace and trim. The collapse rebuild is guarded:
     already-single-spaced text (the overwhelming majority) skips it."""
@@ -35,21 +32,6 @@ def normalize_ws(col: Column) -> Column:
             col.rlike(r"\s\s|[\t\n\r]"), F.regexp_replace(col, r"\s+", " ")
         ).otherwise(col)
     )
-
-
-def lower_guarded(col: Column) -> Column:
-    """lower() copies the string even when it's already lowercase — guard
-    with an uppercase search so all-lowercase rows pass through."""
-    return F.when(col.rlike("[A-Z]"), F.lower(col)).otherwise(col)
-
-
-def normalize_text(col: Column) -> Column:
-    """F1+F2+F3 composite: lowercase → URL mask → mention mask → ws collapse.
-
-    Lowercasing happens first so the masked tokens (``URL``/``@USER``) come
-    out canonically uppercase, matching the reference's convention.
-    """
-    return normalize_ws(mask_mentions(mask_urls(F.lower(col))))
 
 
 def tokens(col: Column) -> Column:

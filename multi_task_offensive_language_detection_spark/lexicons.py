@@ -163,12 +163,3 @@ THRESHOLDS = {
     "toxicity_max_hits": 3,  # >= this many profane tokens → drop
     "toxicity_max_density": 0.5,  # or profane share of tokens >= this
 }
-
-#: drop_reason evaluation priority — first failing gate wins. Length goes
-#: FIRST: sub-8-char strings carry no usable langid signal, so gating them
-#: on length keeps the decision deterministic and cheap (no UDF output
-#: consulted for them at all).
-DROP_PRIORITY = ("length", "langid", "repetition", "caps", "perplexity", "toxicity")
-
-#: PII scrub placeholder tokens (FIXTURES.md §3).
-PLACEHOLDERS = ("<EMAIL>", "<PHONE>", "<SSN>", "<IP>", "@USER", "URL", "<PROFANITY>")

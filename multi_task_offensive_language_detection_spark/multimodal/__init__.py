@@ -19,5 +19,4 @@ from .codecs import (  # noqa: F401
     decode_ppm,
     encode_avi,
     encode_bmp,
-    encode_ppm,
 )

@@ -117,20 +117,6 @@ def _pnm_tokens(data: bytes, n_tokens: int) -> tuple[list[int], int]:
     return vals, i + 1
 
 
-def encode_ppm(img: np.ndarray) -> bytes:
-    """(H, W, 3) uint8 → binary P6; (H, W, 1) or (H, W) → binary P5."""
-    if img.dtype != np.uint8:
-        raise ValueError("encode_ppm expects uint8")
-    if img.ndim == 2:
-        img = img[:, :, None]
-    h, w, ch = img.shape
-    if ch == 3:
-        return b"P6\n%d %d\n255\n" % (w, h) + img.tobytes()
-    if ch == 1:
-        return b"P5\n%d %d\n255\n" % (w, h) + img.tobytes()
-    raise ValueError(f"unsupported channel count {ch}")
-
-
 def decode_ppm(data: bytes) -> np.ndarray:
     """P6 → (H, W, 3) uint8; P5 → (H, W, 1) uint8. maxval ≤ 255 only."""
     magic = data[:2]

@@ -7,7 +7,7 @@ independent stdlib ``wave``/``audioop`` path, giving real cross-checking).
 
 Exposed two ways:
 - ``decode_stats_udf`` — Arrow-batched pandas UDF returning
-  struct<ok, n_samples, rms, snr_db_vs_sine> for the sampled audit pass
+  struct<ok, n_samples, rms, dur_ms_decoded> for the sampled audit pass
   (kept OFF the hot filter path so Parquet column pruning never reads the
   huge ``bytes`` column during text scoring — SURVEY.md §4.2).
 - ``decode_pcm(bytes, codec)`` — plain numpy function for tests/tools.
@@ -29,25 +29,6 @@ from pyspark.sql import types as T
 # --- codecs (pure numpy) ---------------------------------------------------
 
 _ULAW_BIAS = 0x84
-_ULAW_CLIP = 32635
-
-
-_ULAW_SEG_ENDS = np.array(
-    [0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF, 0x1FFF], dtype=np.int32
-)
-
-
-def ulaw_encode(pcm16: np.ndarray) -> np.ndarray:
-    """G.711 µ-law compression: int16 → uint8, bit-exact with the classic
-    CCITT implementation (14-bit domain, arithmetic >>2 BEFORE magnitude —
-    that floor on negatives is why a naive abs-first version is off by one
-    code for some negative inputs)."""
-    x = pcm16.astype(np.int32) >> 2
-    mask = np.where(x < 0, 0x7F, 0xFF)
-    x = np.minimum(np.abs(x), 8159) + 33
-    seg = np.searchsorted(_ULAW_SEG_ENDS, x, side="left")
-    uval = (seg << 4) | ((x >> (seg + 1)) & 0x0F)
-    return (np.where(seg >= 8, 0x7F, uval) ^ mask).astype(np.uint8)
 
 
 def ulaw_decode(u8: np.ndarray) -> np.ndarray:
@@ -97,21 +78,6 @@ def decode_pcm(data: bytes | None, codec: str | None) -> np.ndarray:
     else:
         raise ValueError(f"unknown codec {codec!r}")
     return pcm.astype(np.float32) / 32768.0
-
-
-def snr_db(ref: np.ndarray, test: np.ndarray) -> float:
-    """10·log10(Σref² / Σ(ref−test)²); inf when identical."""
-    n = min(len(ref), len(test))
-    if n == 0:
-        return float("-inf")
-    ref, test = ref[:n].astype(np.float64), test[:n].astype(np.float64)
-    noise = float(np.sum((ref - test) ** 2))
-    sig = float(np.sum(ref**2))
-    if noise == 0.0:
-        return float("inf")
-    if sig == 0.0:
-        return float("-inf")
-    return 10.0 * np.log10(sig / noise)
 
 
 # --- Spark surface ---------------------------------------------------------
@@ -259,7 +225,7 @@ def resample_clips(df, target_sr: int, out_col: str = "audio_rs"):
     return df.withColumn(out_col, resample_udf(target_sr)("bytes", "codec", "sr_hz"))
 
 
-# --- energy-based VAD / silence trim ---------------------------------------
+# --- energy-based VAD ------------------------------------------------------
 
 VAD_RESULT = T.StructType(
     [
@@ -278,8 +244,7 @@ def _speech_frames(pcm, s: int, frame_ms: int, energy_thresh: float):
     speech mask of non-empty ``pcm`` at ``s`` Hz — fixed ``frame_ms``
     frames, a frame is speech when its mean square exceeds
     ``energy_thresh``, and a trailing partial frame's mean is over its
-    real length. The one framing vad_stats_udf and trim_silence share,
-    so the trim cannot drift from the VAD's frame classification."""
+    real length."""
     flen = max(int(s * frame_ms / 1000), 1)
     k = -(-len(pcm) // flen)  # ceil
     pad = np.zeros(k * flen)
@@ -589,151 +554,3 @@ def normalize_clips(df, target_rms: float = 0.1, mode: str = "rms", out_col: str
         out_col, normalize_gain_udf(target_rms, mode)("bytes", "codec", "sr_hz")
     )
 
-
-# --- silence trimming (applies the VAD cut to the payload) -----------------
-
-TRIM_RESULT = T.StructType(
-    [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("n_samples", T.IntegerType()),
-        T.StructField("dur_ms", T.DoubleType()),
-        T.StructField("cut_lead_ms", T.DoubleType()),
-        T.StructField("cut_tail_ms", T.DoubleType()),
-    ]
-)
-
-
-def _speech_bounds(pcm, s: int, frame_ms: int, energy_thresh: float):
-    """[start_sample, end_sample) of the speech span under the VAD's
-    framing (_speech_frames), or None when no frame is speech."""
-    flen, speech = _speech_frames(pcm, s, frame_ms, energy_thresh)
-    if not speech.any():
-        return None
-    idx = np.flatnonzero(speech)
-    return idx[0] * flen, min((idx[-1] + 1) * flen, len(pcm))
-
-
-def trim_silence_udf(frame_ms: int = 10, energy_thresh: float = 1e-6):
-    """(bytes, codec, sr_hz) → struct<ok, bytes, n_samples, dur_ms,
-    cut_lead_ms, cut_tail_ms>: CUT the decoded PCM to its speech span
-    (first speech frame start .. last speech frame end, same energy
-    framing as vad_stats_udf) and re-encode pcm_s16le — the apply-side
-    of the VAD, ahead of storage/feature extraction so dead air never
-    costs bytes again. Clips with no speech frames yield ok=true with
-    NULL bytes and n_samples=0 (a drop candidate for the length gate);
-    undecodable payloads yield ok=false. The trimmed samples round-trip
-    bit-exactly (the cut is at sample boundaries; no resampling)."""
-
-    @F.pandas_udf(TRIM_RESULT)
-    def _trim(
-        it: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
-    ) -> Iterator[pd.DataFrame]:
-        for data, codec, sr in it:
-            n = len(data)
-            ok = np.zeros(n, dtype=bool)
-            out_b: list = [None] * n
-            ns = np.zeros(n, dtype=np.int32)
-            dur = np.zeros(n, dtype=np.float64)
-            cl = np.zeros(n, dtype=np.float64)
-            ct = np.zeros(n, dtype=np.float64)
-            for i in range(n):
-                try:
-                    s = int(sr.iloc[i]) if sr.iloc[i] is not None else 0
-                    if s <= 0:
-                        continue
-                    pcm = decode_pcm(data.iloc[i], codec.iloc[i]).astype(np.float64)
-                except (ValueError, IndexError, TypeError):
-                    continue
-                if len(pcm) == 0:
-                    continue
-                ok[i] = True
-                bounds = _speech_bounds(pcm, s, frame_ms, energy_thresh)
-                if bounds is None:
-                    cl[i] = len(pcm) * 1000.0 / s
-                    continue
-                a, b = bounds
-                seg = pcm[a:b]
-                q = np.clip(np.rint(seg * 32768.0), -32768, 32767).astype(np.int16)
-                out_b[i] = q.tobytes()
-                ns[i] = b - a
-                dur[i] = (b - a) * 1000.0 / s
-                cl[i] = a * 1000.0 / s
-                ct[i] = (len(pcm) - b) * 1000.0 / s
-            yield pd.DataFrame(
-                {
-                    "ok": ok,
-                    "bytes": out_b,
-                    "n_samples": ns,
-                    "dur_ms": dur,
-                    "cut_lead_ms": cl,
-                    "cut_tail_ms": ct,
-                }
-            )
-
-    return _trim
-
-
-def trim_clips(df, frame_ms: int = 10, energy_thresh: float = 1e-6, out_col: str = "trimmed"):
-    """Attach the silence-trimmed payload (codec 'pcm_s16le', source
-    rate unchanged)."""
-    return df.withColumn(
-        out_col, trim_silence_udf(frame_ms, energy_thresh)("bytes", "codec", "sr_hz")
-    )
-
-
-# --- zero-crossing stats (cheap spectral proxy) ----------------------------
-
-ZCR_RESULT = T.StructType(
-    [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("n_zero_cross", T.IntegerType()),
-        T.StructField("zcr_per_s", T.DoubleType()),
-    ]
-)
-
-
-def zcr_stats_udf():
-    """(bytes, codec, sr_hz) → struct<ok, n_zero_cross, zcr_per_s>:
-    count STRICT sign changes (x[i]·x[i+1] < 0 — zero samples never
-    count, so silence contributes nothing) and the rate per second
-    (count·sr/len). ZCR is the classic O(n) spectral proxy: voiced
-    speech sits low, fricatives/noise high, a constant-amplitude tone
-    at exactly 2·f0/sr crossings — used as a cheap quality signal next
-    to the VAD's energy view (a clip whose ZCR says broadband noise
-    but whose energy says speech is a drop candidate). Exact closed
-    form on the synthetic ±A alternating waves: len-1 crossings for a
-    full wave, speech·flen-1 for the silence|speech|silence shape."""
-
-    @F.pandas_udf(ZCR_RESULT)
-    def _zcr(
-        it: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
-    ) -> Iterator[pd.DataFrame]:
-        for data, codec, sr in it:
-            n = len(data)
-            ok = np.zeros(n, dtype=bool)
-            nz = np.zeros(n, dtype=np.int32)
-            rate = np.zeros(n, dtype=np.float64)
-            for i in range(n):
-                try:
-                    s = int(sr.iloc[i]) if sr.iloc[i] is not None else 0
-                    if s <= 0:
-                        continue
-                    pcm = decode_pcm(data.iloc[i], codec.iloc[i]).astype(np.float64)
-                except (ValueError, IndexError, TypeError):
-                    continue
-                if len(pcm) == 0:
-                    continue
-                ok[i] = True
-                if len(pcm) > 1:
-                    nz[i] = int(np.sum(pcm[:-1] * pcm[1:] < 0))
-                rate[i] = nz[i] * float(s) / len(pcm)
-            yield pd.DataFrame({"ok": ok, "n_zero_cross": nz, "zcr_per_s": rate})
-
-    return _zcr
-
-
-def with_zcr_stats(df, out_col: str = "zcr"):
-    """Attach zero-crossing stats (same sampled-audit guidance as
-    with_audio_stats — touching ``bytes`` defeats column pruning)."""
-    return df.withColumn(out_col, zcr_stats_udf()("bytes", "codec", "sr_hz"))

@@ -97,50 +97,6 @@ def jaccard(a: Column, b: Column) -> Column:
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    key_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-    block_col: str | None = None,
-    allow_unblocked_rows: int = 100_000,
-) -> DataFrame:
-    """Exact pairwise n-gram Jaccard ≥ threshold. O(n²) per block — ONLY
-    for small blocks / verification; the scale path is minhash_lsh_pairs.
-
-    Guardrail: without ``block_col`` the self-join is a full cartesian, so
-    the unblocked form refuses inputs larger than ``allow_unblocked_rows``
-    (the check is one cheap count; at table scale you must block)."""
-    _check_lsh_params(n, threshold)
-    if block_col is None:
-        n_rows = df.count()
-        if n_rows > allow_unblocked_rows:
-            raise ValueError(
-                f"ngram_jaccard_pairs without block_col is O(n^2): got "
-                f"{n_rows} rows > allow_unblocked_rows={allow_unblocked_rows}. "
-                "Pass block_col (or use minhash_lsh_pairs, the scale path)."
-            )
-    s = df.select(
-        F.col(key_col).alias("k"),
-        char_shingles(F.col(text_col), n).alias("sh"),
-        *( [F.col(block_col).alias("blk")] if block_col else [] ),
-    )
-    a, b = s.alias("a"), s.alias("b")
-    cond = F.col("a.k") < F.col("b.k")
-    if block_col:
-        cond = cond & (F.col("a.blk") == F.col("b.blk"))
-    return (
-        a.join(b, cond)
-        .select(
-            F.col("a.k").alias("k1"),
-            F.col("b.k").alias("k2"),
-            jaccard(F.col("a.sh"), F.col("b.sh")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 # --- MinHash + LSH (Arrow band kernel, scale path) ------------------------------
 
 #: MinHash signature width and its banding: LSH_BANDS bands of LSH_ROWS
@@ -308,7 +264,7 @@ def _check_lsh_params(
     pair set: no shingles (n < 1), a threshold no Jaccard can or every
     pair will pass, a bucket cap that drops every bucket with a pair, or
     no cap (``None``: each bucket would collect an unbounded array).
-    Shared by the LSH, n-gram Jaccard and SimHash operators."""
+    Shared by the LSH and SimHash operators."""
     if n < 1:
         raise ValueError(f"n={n}: shingle size must be >= 1")
     if not 0 < verify_threshold <= 1:
@@ -926,7 +882,7 @@ def embedding_neardup_pairs(
     """Cosine ≥ threshold pairs. Brute force within blocks (exact); for
     table-scale use similarity.lsh_bucket first and feed buckets here.
 
-    Guardrail (mirrors ngram_jaccard_pairs): without ``block_col`` the
+    Guardrail: without ``block_col`` the
     ``a.k < b.k`` self-join is a BroadcastNestedLoop cartesian, so the
     unblocked form refuses inputs larger than ``allow_unblocked_rows`` —
     one cheap count up front instead of an O(n²) job at table scale."""

@@ -58,7 +58,3 @@ def demojize_py(s: str) -> str:
 def demojize_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
     for s in it:
         yield s.fillna("").map(demojize_py)
-
-
-def with_demojized(df, text_col: str, out_col: str = "demojized"):
-    return df.withColumn(out_col, demojize_udf(F.col(text_col)))

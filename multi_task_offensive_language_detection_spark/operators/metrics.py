@@ -65,7 +65,3 @@ def f1_per_class(df: DataFrame, gold: str = "gold", pred: str = "pred") -> DataF
 def macro_f1(df: DataFrame, gold: str = "gold", pred: str = "pred") -> DataFrame:
     """A6 — the headline metric (single row)."""
     return f1_per_class(df, gold, pred).agg(F.avg("f1").alias("macro_f1"))
-
-
-def macro_f1_value(df: DataFrame, gold: str = "gold", pred: str = "pred") -> float:
-    return macro_f1(df, gold, pred).collect()[0]["macro_f1"]

@@ -98,19 +98,6 @@ def doc_fingerprint(col: Column) -> Column:
     return F.xxhash64(F.regexp_replace(F.trim(col), r"\s+", " "))
 
 
-def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
-    return df.withColumns(
-        {
-            "lang_guess": langid_heuristic(c),
-            "quality": quality_score(c),
-            "n_tokens_ws": token_count(c),
-            "n_tokens_bpe": bpe_ish_token_count(c),
-            "fingerprint": doc_fingerprint(c),
-        }
-    )
-
-
 def select_to_budget(
     df,
     group_col: str,

@@ -2,10 +2,12 @@
 
 All pure Column expressions over pre-computed score columns — one
 WholeStageCodegen projection. The drop_reason is the FIRST failing gate in
-the pinned priority order lexicons.DROP_PRIORITY (length → langid →
-repetition → caps → perplexity → toxicity); this mirrors the reference's
-distant-supervision keep/drop thresholding (SURVEY.md §3.3, P4) which is
-the semantic ancestor of the whole filter.
+the fixed priority order length → langid → repetition → caps → perplexity
+→ toxicity. Length goes first: sub-8-char strings carry no usable langid
+signal, so gating them on length keeps the decision deterministic and
+cheap. This mirrors the reference's distant-supervision keep/drop
+thresholding (SURVEY.md §3.3, P4), the semantic ancestor of the whole
+filter.
 """
 
 from __future__ import annotations

@@ -84,7 +84,7 @@ _WS_GUARD = re.compile(r"[ \t\n\x0b\f\r][ \t\n\x0b\f\r]|[\t\n\r]")
 
 
 def _norm_one(t: str) -> str:
-    # lower_guarded parity: the JVM guard fires on ASCII [A-Z] only, so a
+    # guarded-lower parity: the JVM guard fires on ASCII [A-Z] only, so a
     # row whose only uppercase is non-ASCII (e.g. 'ÄÖÜ') is NOT lowered
     if _ASCII_UPPER.search(t):
         t = t.lower()
@@ -97,8 +97,9 @@ def _normalize_batch(texts: pd.Series) -> pd.Series:
     """lower_guarded + Java-\\s ws-collapse + space-trim, C-level per
     batch — byte-equivalent to the former JVM chain
     ``normalize_ws(lower_guarded(x))`` (pinned by
-    tests/test_scoring_properties.py): the guard replicates
-    lower_guarded's ASCII-[A-Z] trigger; ``_JAVA_WS.sub(' ')`` collapses
+    tests/test_scoring_properties.py, which keeps ``lower_guarded`` as the
+    JVM reference): the guard replicates lower_guarded's ASCII-[A-Z]
+    trigger; ``_JAVA_WS.sub(' ')`` collapses
     exactly the runs Java's ``\\s+`` matched (same 5-char class); after
     the collapse every edge run is a single ' ', which ``strip(' ')``
     removes just like Spark's space-only ``trim``. Unicode whitespace

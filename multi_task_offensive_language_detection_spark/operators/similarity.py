@@ -20,10 +20,6 @@ from pyspark.sql import functions as F
 from ..functions.arrays import cosine, cosine_lit, dot, dot_lit
 
 
-def _lit_vec(vec) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vec])
-
-
 def brute_force_topk(
     df: DataFrame, vec_col: str, query: list[float], k: int = 10, id_col: str = "vec_id"
 ) -> DataFrame:

@@ -44,9 +44,3 @@ def merge_upsert(
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_src")
     )
-
-
-def merge_delete(target: DataFrame, deletes: DataFrame, keys: list[str]) -> DataFrame:
-    """WHEN MATCHED DELETE — an anti-join; broadcast when the delete set
-    is small (the planner's choice via AQE)."""
-    return target.join(deletes.select(*keys), keys, "left_anti")

@@ -18,50 +18,6 @@ CLIPS_SCHEMA = T.StructType(
     ]
 )
 
-#: Output table emitted by the pipeline (SURVEY.md §1.2).
-SCORES_SCHEMA = T.StructType(
-    [
-        T.StructField("langid_lang", T.StringType(), True),
-        T.StructField("langid_conf", T.DoubleType(), True),
-        T.StructField("ppl", T.DoubleType(), True),
-        T.StructField("caps_ratio", T.DoubleType(), True),
-        T.StructField("rep_char_ratio", T.DoubleType(), True),
-        T.StructField("rep_tok_ratio", T.DoubleType(), True),
-    ]
-)
-
-FILTERED_SCHEMA = T.StructType(
-    [
-        T.StructField("clip_id", T.StringType(), False),
-        T.StructField("keep", T.BooleanType(), False),
-        T.StructField("label_a", T.StringType(), True),  # OFF|NOT
-        T.StructField("label_b", T.StringType(), True),  # TIN|UNT|null
-        T.StructField("label_c", T.StringType(), True),  # IND|GRP|OTH|null
-        T.StructField("scrubbed_transcript", T.StringType(), True),
-        T.StructField("drop_reason", T.StringType(), True),
-        T.StructField("scores", SCORES_SCHEMA, True),
-        T.StructField("part_id", T.IntegerType(), True),
-    ]
-)
-
-#: Ledger row written per processed partition (SURVEY.md §4.4).
-LEDGER_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("fingerprint", T.StringType(), False),
-        T.StructField("n_in", T.LongType(), False),
-        T.StructField("n_keep", T.LongType(), False),
-        T.StructField("n_langid_reject", T.LongType(), False),
-        T.StructField("n_ppl_drop", T.LongType(), False),
-        T.StructField("n_rule_drop", T.LongType(), False),
-        T.StructField("n_toxicity_drop", T.LongType(), False),
-        T.StructField("n_scrub_edits", T.LongType(), False),
-        T.StructField("job_wall_ms", T.LongType(), False),
-        T.StructField("attempt", T.IntegerType(), False),
-    ]
-)
-
 #: The driver-provided test tables (TESTDATA.md).
 TESTDATA_TABLES = (
     "region",

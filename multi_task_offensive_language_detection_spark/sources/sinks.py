@@ -21,10 +21,3 @@ def write_submission_csv(
         .option("header", "false")
         .csv(path)
     )
-
-
-def write_predictions_parquet(df: DataFrame, path: str, partition_col: str | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_col:
-        w = w.partitionBy(partition_col)
-    w.parquet(path)

@@ -32,14 +32,6 @@ def tumbling_counts(df: DataFrame, window: str = "10 minutes") -> DataFrame:
     )
 
 
-def sliding_counts(df: DataFrame, window: str = "10 minutes", slide: str = "5 minutes") -> DataFrame:
-    return (
-        df.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.unix_timestamp("w.start").alias("bucket_start_s"), "event_type", "n")
-    )
-
-
 def session_counts(df: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """T3 — per-user session windows (gap-based)."""
     return (
@@ -160,10 +152,6 @@ def stateful_session_stats(
             fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
         )
     )
-
-
-def read_events_stream(spark: SparkSession, path: str, schema) -> DataFrame:
-    return spark.readStream.schema(schema).parquet(path)
 
 
 def run_available_now(out_df: DataFrame, checkpoint: str, out_path: str):

@@ -1,5 +1,6 @@
 """Reference kernels for the MinHash/LSH features pass
-(operators/dedup.py minhash64_band_features_udf). Test-only: each
+(operators/dedup.py minhash64_band_features_udf) and the exact all-pairs
+Jaccard the LSH pair sets are checked against. Test-only: each
 recomputes its result from raw text without the production signature,
 banding or verify code, so equality with the production columns pins
 them."""
@@ -19,6 +20,8 @@ from multi_task_offensive_language_detection_spark.functions.hashing import (
 from multi_task_offensive_language_detection_spark.operators.dedup import (
     _MINHASH_A,
     _MINHASH_MASK,
+    char_shingles,
+    jaccard,
 )
 
 
@@ -102,3 +105,22 @@ def jaccard_texts_udf(n: int = 5):
             yield pd.Series(out)
 
     return _j
+
+
+def ngram_jaccard_pairs(df, key_col: str, text_col: str, n: int = 3, threshold: float = 0.8):
+    """(k1, k2, jaccard) for every pair with exact n-gram Jaccard ≥
+    threshold — the all-pairs oracle LSH pair sets are checked against.
+    A full ``a.k < b.k`` self-join, O(n²): small test frames only. Built
+    on the live char_shingles and jaccard (the driver's exact-Jaccard
+    key uses them too), not on any LSH code."""
+    s = df.select(F.col(key_col).alias("k"), char_shingles(F.col(text_col), n).alias("sh"))
+    a, b = s.alias("a"), s.alias("b")
+    return (
+        a.join(b, F.col("a.k") < F.col("b.k"))
+        .select(
+            F.col("a.k").alias("k1"),
+            F.col("b.k").alias("k2"),
+            jaccard(F.col("a.sh"), F.col("b.sh")).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )

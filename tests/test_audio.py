@@ -14,12 +14,42 @@ from pyspark.sql import functions as F
 
 from multi_task_offensive_language_detection_spark.operators.audio import (
     decode_pcm,
-    snr_db,
     ulaw_decode,
-    ulaw_encode,
     with_audio_stats,
 )
 from tests.fixtures.clips_gen import encode_audio, make_clips, synth_waveform
+
+_ULAW_SEG_ENDS = np.array(
+    [0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF, 0x1FFF], dtype=np.int32
+)
+
+
+def ulaw_encode(pcm16: np.ndarray) -> np.ndarray:
+    """G.711 µ-law compression: int16 → uint8, bit-exact with the classic
+    CCITT implementation (14-bit domain, arithmetic >>2 BEFORE magnitude —
+    that floor on negatives is why a naive abs-first version is off by one
+    code for some negative inputs)."""
+    x = pcm16.astype(np.int32) >> 2
+    mask = np.where(x < 0, 0x7F, 0xFF)
+    x = np.minimum(np.abs(x), 8159) + 33
+    seg = np.searchsorted(_ULAW_SEG_ENDS, x, side="left")
+    uval = (seg << 4) | ((x >> (seg + 1)) & 0x0F)
+    return (np.where(seg >= 8, 0x7F, uval) ^ mask).astype(np.uint8)
+
+
+def snr_db(ref: np.ndarray, test: np.ndarray) -> float:
+    """10·log10(Σref² / Σ(ref−test)²); inf when identical."""
+    n = min(len(ref), len(test))
+    if n == 0:
+        return float("-inf")
+    ref, test = ref[:n].astype(np.float64), test[:n].astype(np.float64)
+    noise = float(np.sum((ref - test) ** 2))
+    sig = float(np.sum(ref**2))
+    if noise == 0.0:
+        return float("inf")
+    if sig == 0.0:
+        return float("-inf")
+    return 10.0 * np.log10(sig / noise)
 
 
 def test_decode_snr_invariant_all_codecs():
@@ -219,100 +249,16 @@ def test_normalize_gain_rms_and_peak(spark):
     assert float(np.max(np.abs(dec))) <= 0.9901
 
 
-def test_trim_silence_bitexact_and_edges(spark):
-    """M9 — trim_clips cuts exactly the speech span of the frame-aligned
-    silence|speech|silence generator: the trimmed bytes equal the
-    original speech segment bit-for-bit, the cut widths are the silent
-    segment durations, all-silence clips yield NULL bytes with the full
-    duration reported as lead cut, and garbage payloads are not ok."""
-    import numpy as np
-
-    from multi_task_offensive_language_detection_spark.operators.audio import (
-        trim_clips,
-    )
-
-    flen = 160  # 10 ms @ 16 kHz
-    rows = []
-    expected = {}
-    for d in (0, 5, 11):  # lead/speech/tail = d%4 / 10+d%7 / d%3
-        lead, speech, tail = d % 4, 10 + d % 7, d % 3
-        amp = 1024 << (d % 3)
-        seg = np.empty(speech * flen, dtype=np.int16)
-        seg[0::2] = amp
-        seg[1::2] = -amp
-        pcm = np.zeros((lead + speech + tail) * flen, dtype=np.int16)
-        pcm[lead * flen : (lead + speech) * flen] = seg
-        rows.append((f"c{d}", pcm.tobytes(), "pcm_s16le", 16000))
-        expected[f"c{d}"] = (seg.tobytes(), speech * flen, lead * 10.0, tail * 10.0)
-    rows.append(("silence", np.zeros(8 * flen, dtype=np.int16).tobytes(), "pcm_s16le", 16000))
-    rows.append(("garbage", b"\x01\x02\x03", "wav-pcm16", 16000))
-    df = spark.createDataFrame(rows, "clip_id string, bytes binary, codec string, sr_hz int")
-    out = {r["clip_id"]: r for r in trim_clips(df).select("clip_id", "trimmed.*").collect()}
-
-    for cid, (seg_b, n, cut_l, cut_t) in expected.items():
-        r = out[cid]
-        assert r["ok"] and bytes(r["bytes"]) == seg_b  # bit-exact cut
-        assert r["n_samples"] == n
-        assert r["dur_ms"] == pytest.approx(n / 16.0)
-        assert r["cut_lead_ms"] == pytest.approx(cut_l)
-        assert r["cut_tail_ms"] == pytest.approx(cut_t)
-    sil = out["silence"]
-    assert sil["ok"] and sil["bytes"] is None and sil["n_samples"] == 0
-    assert sil["cut_lead_ms"] == pytest.approx(8 * 10.0)
-    assert not out["garbage"]["ok"]
-
-
-def test_zcr_closed_forms(spark):
-    """M10 — zero-crossing stats: a ±A per-sample alternating wave has
-    exactly n-1 strict sign changes; zeros never count (the
-    silence|speech|silence shape yields speech·flen−1); garbage is not
-    ok."""
-    import numpy as np
-
-    from multi_task_offensive_language_detection_spark.operators.audio import (
-        with_zcr_stats,
-    )
-
-    flen = 160
-    full = np.empty(800, dtype=np.int16)
-    full[0::2] = 2048
-    full[1::2] = -2048
-    lead, speech, tail = 2, 12, 1
-    seg = np.empty(speech * flen, dtype=np.int16)
-    seg[0::2] = 1024
-    seg[1::2] = -1024
-    framed = np.zeros((lead + speech + tail) * flen, dtype=np.int16)
-    framed[lead * flen : (lead + speech) * flen] = seg
-    rows = [
-        ("full", full.tobytes(), "pcm_s16le", 16000),
-        ("framed", framed.tobytes(), "pcm_s16le", 16000),
-        ("one", np.array([512], dtype=np.int16).tobytes(), "pcm_s16le", 16000),
-        ("garbage", b"\xff", "wav-pcm16", 16000),
-    ]
-    df = spark.createDataFrame(rows, "clip_id string, bytes binary, codec string, sr_hz int")
-    out = {r["clip_id"]: r for r in with_zcr_stats(df).select("clip_id", "zcr.*").collect()}
-
-    assert out["full"]["ok"] and out["full"]["n_zero_cross"] == 799
-    assert out["full"]["zcr_per_s"] == pytest.approx(799 * 16000.0 / 800)
-    n_framed = (lead + speech + tail) * flen
-    assert out["framed"]["n_zero_cross"] == speech * flen - 1
-    assert out["framed"]["zcr_per_s"] == pytest.approx((speech * flen - 1) * 16000.0 / n_framed)
-    assert out["one"]["ok"] and out["one"]["n_zero_cross"] == 0
-    assert not out["garbage"]["ok"]
-
-
 def test_trim_silence_property_vs_independent_reference(spark):
-    """Property pin for trim_clips against an INDEPENDENT per-sample
-    reference: for random PCM with random silent padding, recompute the
-    speech span with a plain-Python frame loop (no shared code with
-    _speech_bounds) and require the trimmed bytes to be exactly the
-    int16 slice of the original payload between those bounds. The VAD
-    stats of the same clips must name the same span: lead_trim_ms is
-    the trim's cut_lead_ms and tail_keep_ms its cut_lead_ms + dur_ms."""
+    """Property pin for the VAD's trim points against an INDEPENDENT
+    per-frame reference: for random PCM with random silent padding,
+    recompute the speech frames with a plain-Python frame loop (no shared
+    code with _speech_frames). The VAD must count the same speech frames
+    and name the same span [a, b) in samples: lead_trim_ms is a·1000/sr
+    and tail_keep_ms b·1000/sr. Clips with no speech report 0 and 0."""
     import numpy as np
 
     from multi_task_offensive_language_detection_spark.operators.audio import (
-        trim_clips,
         with_vad_stats,
     )
 
@@ -337,20 +283,23 @@ def test_trim_silence_property_vs_independent_reference(spark):
         for i in range(k):
             seg = f[i * flen : min((i + 1) * flen, n)]
             speech.append(float(np.mean(seg * seg)) > thresh)
+        span = None
         if any(speech):
             first = speech.index(True)
             last = len(speech) - 1 - speech[::-1].index(True)
-            a, b = first * flen, min((last + 1) * flen, n)
-            ref[cid] = pcm[a:b].tobytes()
-        else:
-            ref[cid] = None
+            span = first * flen, min((last + 1) * flen, n)
+        ref[cid] = (k, sum(speech), span)
     df = spark.createDataFrame(rows, "clip_id string, bytes binary, codec string, sr_hz int")
-    out = {r["clip_id"]: r for r in trim_clips(df).select("clip_id", "trimmed.*").collect()}
     vad = {r["clip_id"]: r["vad"] for r in with_vad_stats(df).select("clip_id", "vad").collect()}
-    for cid, expect in ref.items():
-        got = out[cid]["bytes"]
-        assert (bytes(got) if got is not None else None) == expect, cid
-        if expect is not None:
-            assert vad[cid]["lead_trim_ms"] == out[cid]["cut_lead_ms"], cid
-            span_end = out[cid]["cut_lead_ms"] + out[cid]["dur_ms"]
-            assert abs(vad[cid]["tail_keep_ms"] - span_end) <= 1e-9, cid
+    assert any(span is None for _, _, span in ref.values())
+    assert any(span is not None for _, _, span in ref.values())
+    for cid, (k, n_speech, span) in ref.items():
+        v = vad[cid]
+        assert v["ok"] and v["n_frames"] == k, cid
+        assert v["n_speech_frames"] == n_speech, cid
+        if span is None:
+            assert (v["lead_trim_ms"], v["tail_keep_ms"]) == (0.0, 0.0), cid
+        else:
+            a, b = span
+            assert v["lead_trim_ms"] == a * 1000 / sr, cid
+            assert abs(v["tail_keep_ms"] - b * 1000 / sr) <= 1e-9, cid

@@ -15,6 +15,7 @@ from tests.lsh_reference import (
     flat_shingle_hashes_lexsort,
     jaccard_texts_udf,
     minhash64_text_udf,
+    ngram_jaccard_pairs,
 )
 
 
@@ -45,7 +46,7 @@ def test_window_dedup_matches_exact(docs):
 def test_minhash_lsh_finds_what_exact_jaccard_finds(docs):
     exact = {
         (r["k1"], r["k2"])
-        for r in dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.8).collect()
+        for r in ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.8).collect()
     }
     approx = {
         (r["k1"], r["k2"])
@@ -133,16 +134,11 @@ def test_char_shingles_short_texts_yield_empty(spark):
     assert out[1] == [] and out[2] == []
     assert out[3] == ["abc"]
     # two empty texts must NOT score jaccard 1.0
-    pairs = dedup.ngram_jaccard_pairs(
+    pairs = ngram_jaccard_pairs(
         spark.createDataFrame([(1, ""), (2, "")], "doc_id long, text string"),
         "doc_id", "text", threshold=0.5,
     )
     assert pairs.count() == 0
-
-
-def test_ngram_jaccard_refuses_unblocked_at_scale(docs):
-    with pytest.raises(ValueError, match="block_col"):
-        dedup.ngram_jaccard_pairs(docs, "doc_id", "text", allow_unblocked_rows=3)
 
 
 def test_embedding_neardup_refuses_unblocked_at_scale(spark):
@@ -743,7 +739,6 @@ def _vectors(spark):
 
 
 _NEARDUP_OPS = {
-    "ngram_jaccard": lambda spark, df, **kw: dedup.ngram_jaccard_pairs(df, "doc_id", "text", **kw),
     "simhash": lambda spark, df, **kw: dedup.simhash_pairs(df, "doc_id", "text", **kw),
     "embedding": lambda spark, df, **kw: dedup.embedding_neardup_pairs(
         _vectors(spark), "vec_id", "embedding", **kw
@@ -751,30 +746,31 @@ _NEARDUP_OPS = {
 }
 
 
+_NEARDUP_CASES = [
+    ("simhash", {"max_hamming": -1}, "max_hamming"),
+    ("simhash", {"max_hamming": -1, "num_chunks": 4}, "max_hamming"),
+    ("simhash", {"max_hamming": 0, "num_chunks": 65}, "num_chunks"),
+    ("simhash", {"max_bucket_size": 1}, "max_bucket_size"),
+    ("simhash", {"max_bucket_size": 0}, "max_bucket_size"),
+    ("embedding", {"threshold": 1.5}, "cosine"),
+    ("embedding", {"threshold": -1.01}, "cosine"),
+    ("simhash", {"max_bucket_size": None}, "max_bucket_size"),
+]
+
+
+# Case ids start at 5 and never renumber: 0-4 are retired, so every
+# remaining case keeps the id its results are tracked under.
 @pytest.mark.parametrize(
     "op, kwargs, match",
-    [
-        ("ngram_jaccard", {"n": 0}, "shingle size"),
-        ("ngram_jaccard", {"n": -1}, "shingle size"),
-        ("ngram_jaccard", {"threshold": 0.0}, "threshold"),
-        ("ngram_jaccard", {"threshold": -0.1}, "threshold"),
-        ("ngram_jaccard", {"threshold": 1.5}, "threshold"),
-        ("simhash", {"max_hamming": -1}, "max_hamming"),
-        ("simhash", {"max_hamming": -1, "num_chunks": 4}, "max_hamming"),
-        ("simhash", {"max_hamming": 0, "num_chunks": 65}, "num_chunks"),
-        ("simhash", {"max_bucket_size": 1}, "max_bucket_size"),
-        ("simhash", {"max_bucket_size": 0}, "max_bucket_size"),
-        ("embedding", {"threshold": 1.5}, "cosine"),
-        ("embedding", {"threshold": -1.01}, "cosine"),
-        ("simhash", {"max_bucket_size": None}, "max_bucket_size"),
-    ],
+    _NEARDUP_CASES,
+    ids=[f"{op}-kwargs{i}-{m}" for i, (op, _, m) in enumerate(_NEARDUP_CASES, start=5)],
 )
 def test_neardup_api_rejects_bad_parameters(spark, docs, op, kwargs, match):
-    """The n-gram Jaccard, SimHash and embedding near-dup operators refuse
-    parameters that cannot give a meaningful pair set (no shingles, a
-    vacuous or unreachable threshold, a SimHash split the pigeonhole
-    bound cannot hold for, a cap that drops every bucket holding a pair
-    or no cap at all) up front, before any Spark job runs."""
+    """The SimHash and embedding near-dup operators refuse parameters
+    that cannot give a meaningful pair set (an unreachable cosine
+    threshold, a SimHash split the pigeonhole bound cannot hold for, a
+    cap that drops every bucket holding a pair or no cap at all) up
+    front, before any Spark job runs."""
 
     def call():
         with pytest.raises(ValueError, match=match):

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from multi_task_offensive_language_detection_spark.operators.metrics import macro_f1_value
+from multi_task_offensive_language_detection_spark.operators.metrics import macro_f1
 from multi_task_offensive_language_detection_spark.plans.pipeline import score_transcripts
 from multi_task_offensive_language_detection_spark.sources.clips import read_clips
 
@@ -47,7 +47,7 @@ def test_subtask_macro_f1(joined, level):
     d = joined.filter(F.col(f"g.{level}").isNotNull()).select(
         F.col(f"g.{level}").alias("gold"), F.col(f"e.{level}").alias("pred")
     )
-    f1 = macro_f1_value(d.fillna("MISSING", subset=["pred"]))
+    f1 = macro_f1(d.fillna("MISSING", subset=["pred"])).first()["macro_f1"]
     assert f1 >= 0.99, f"{level} macro-F1 {f1:.4f} < 0.99"
 
 

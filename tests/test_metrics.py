@@ -41,7 +41,7 @@ def test_f1_per_class(preds):
 
 def test_macro_f1(preds):
     expect = (2 / 3 + 0.4 + 2 / 3) / 3
-    assert abs(metrics.macro_f1_value(preds) - expect) < 1e-12
+    assert abs(metrics.macro_f1(preds).first()["macro_f1"] - expect) < 1e-12
 
 
 def test_zero_division_class(spark):

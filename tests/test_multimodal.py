@@ -15,10 +15,23 @@ from multi_task_offensive_language_detection_spark.multimodal import (
     decode_ppm,
     encode_avi,
     encode_bmp,
-    encode_ppm,
     sample_frames,
     with_image_features,
 )
+
+
+def encode_ppm(img: np.ndarray) -> bytes:
+    """(H, W, 3) uint8 → binary P6; (H, W, 1) or (H, W) → binary P5."""
+    if img.dtype != np.uint8:
+        raise ValueError("encode_ppm expects uint8")
+    if img.ndim == 2:
+        img = img[:, :, None]
+    h, w, ch = img.shape
+    if ch == 3:
+        return b"P6\n%d %d\n255\n" % (w, h) + img.tobytes()
+    if ch == 1:
+        return b"P5\n%d %d\n255\n" % (w, h) + img.tobytes()
+    raise ValueError(f"unsupported channel count {ch}")
 
 
 def test_bmp_roundtrip_bit_exact():

@@ -8,6 +8,8 @@ stalest-first) — these tests pin the generator's contract.
 
 from __future__ import annotations
 
+import os
+
 from multi_task_offensive_language_detection_spark import checks
 
 
@@ -101,6 +103,29 @@ def test_oracle_changed_keys_detects_fingerprint_mismatch(tmp_path):
     assert checks.oracle_fingerprint("SELECT  1\n") == checks.oracle_fingerprint(
         "SELECT 1"
     )
+
+
+def test_fingerprint_ignores_the_checkout_path(tmp_path):
+    """An oracle that reads a pinned fixture embeds its absolute path; a
+    copy of the package at another root must fingerprint it the same, or
+    every such key reads as changed in any other checkout."""
+    import shutil
+    import subprocess
+    import sys
+
+    key = "str_hashtag_segment"
+    assert checks._REPO_ROOT in checks.ORACLES[key]
+    pkg = os.path.dirname(os.path.abspath(checks.__file__))
+    shutil.copytree(pkg, tmp_path / os.path.basename(pkg), ignore=shutil.ignore_patterns("__pycache__"))
+    code = (
+        "from multi_task_offensive_language_detection_spark import checks as c; "
+        f"assert c._REPO_ROOT != {checks._REPO_ROOT!r}; "
+        f"print(c.oracle_fingerprint(c.ORACLES[{key!r}]))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == checks.oracle_fingerprint(checks.ORACLES[key])
 
 
 def test_fingerprint_store_covers_green_oracled_keys():

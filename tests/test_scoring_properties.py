@@ -17,6 +17,15 @@ from multi_task_offensive_language_detection_spark.operators.langid import Langi
 from multi_task_offensive_language_detection_spark.operators.perplexity import NgramLM
 
 
+def lower_guarded(col):
+    """The JVM lowercasing _normalize_batch replicates: lower() copies the
+    string even when it's already lowercase, so an uppercase search
+    guards it and all-lowercase rows pass through."""
+    from pyspark.sql import functions as F
+
+    return F.when(col.rlike("[A-Z]"), F.lower(col)).otherwise(col)
+
+
 @pytest.fixture(scope="module")
 def models(artifacts):
     return LangidModel.load(artifacts["langid"]), NgramLM.load(artifacts["lm"])
@@ -209,7 +218,7 @@ def test_normalize_batch_matches_jvm_expression(spark):
     jvm = {
         r["i"]: r["n"]
         for r in df.select(
-            "i", FT.normalize_ws(FT.lower_guarded(F.col("t"))).alias("n")
+            "i", FT.normalize_ws(lower_guarded(F.col("t"))).alias("n")
         ).collect()
     }
     got = _normalize_batch(pd.Series(_ADVERSARIAL))
@@ -245,7 +254,7 @@ def test_null_text_scores_as_empty(spark):
     jvm = df.select(
         "clip_id",
         FT.caps_ratio(F.col("transcript")).alias("caps"),
-        FT.normalize_ws(FT.lower_guarded(F.col("transcript"))).alias("n"),
+        FT.normalize_ws(lower_guarded(F.col("transcript"))).alias("n"),
     ).collect()
     jn = {r["clip_id"]: r for r in jvm}
     assert jn["null_row"]["caps"] is None and jn["null_row"]["n"] is None
@@ -275,7 +284,7 @@ def test_char_stats_property_random_strings(spark, s):
         FT.caps_ratio(F.col("t")).alias("caps"),
         FT.has_char_run(F.col("t"), 5).alias("run"),
         FT.rep_char_ratio(F.col("t")).alias("rep"),
-        FT.normalize_ws(FT.lower_guarded(F.col("t"))).alias("n"),
+        FT.normalize_ws(lower_guarded(F.col("t"))).alias("n"),
     ).collect()[0]
     caps, runs, reps = char_stats_batch([s], 5)
     assert caps[0] == r["caps"] and bool(runs[0]) == r["run"] and reps[0] == r["rep"]

@@ -14,8 +14,9 @@ from multi_task_offensive_language_detection_spark.functions.scrub import (
     IP_RE,
     PHONE_RE,
     SSN_RE,
-    scrub_all,
     scrub_edit_count,
+    scrub_pii,
+    scrub_profanity,
 )
 
 # driver-free scrub evaluation: run the same chain with Python `re`
@@ -23,6 +24,11 @@ from multi_task_offensive_language_detection_spark.functions.scrub import (
 # the Spark column for the golden batch test.
 from multi_task_offensive_language_detection_spark.functions.scrub import PII_CHAIN
 from multi_task_offensive_language_detection_spark.functions.scrub import _profanity_re
+
+
+def scrub_all(col):
+    """Full scrub: PII chain then profanity replacement."""
+    return scrub_profanity(scrub_pii(col))
 
 
 def scrub_py(s: str) -> str:

@@ -42,9 +42,3 @@ def test_merge_upsert_duplicate_update_keys_tiebreak_is_deterministic(spark):
         assert out[1]["name"] == "v3" and out[1]["ver"] == 3.0
         assert out[2]["name"] == "n2"
 
-
-def test_merge_delete_anti_join(spark):
-    target = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, name string")
-    deletes = spark.createDataFrame([(2, "ignored")], "k long, other string")
-    left = sorted(r["k"] for r in upsert.merge_delete(target, deletes, ["k"]).collect())
-    assert left == [1, 3]
