@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from .functions import text as FT
 from .functions.arrays import dot
-from .functions.scrub import scrub_pii
+from .functions.scrub import MENTION_RE, scrub_pii
 from .operators import dedup, metrics, quality, similarity
 from .operators.quality import STOPWORDS
 from .sources.testdata import load_table
@@ -691,7 +691,7 @@ def str_mask_user(spark, sf):
     d = _t(spark, sf, "documents")
     synth = F.concat(F.lit("@user"), F.col("doc_id"), F.lit(" hello @world "), F.col("text"))
     return d.select(
-        "doc_id", F.regexp_replace(synth, FT.MENTION_RE, "@USER").alias("masked")
+        "doc_id", F.regexp_replace(synth, MENTION_RE, "@USER").alias("masked")
     )
 
 

@@ -4,10 +4,10 @@ Everything here is a pure ``Column`` expression — JVM-side, codegen'd,
 Catalyst-collapsible (CollapseProject fuses the regexp_replace chain into
 one projection). It covers the reference's pandas preprocessing steps
 ([R] ref:data.py) that the filter and the driver keys use: whitespace
-collapse (F1), URL→'URL' (F2), the @mention pattern the scrub chain and
-the masking key replace with '@USER', tokenizing and truncation (F6-F7)
-and the caps/repetition scores (F8-F10). The reference's cap of repeated
-@USER runs at 3 (F3) has no caller here and is not implemented.
+collapse (F1), URL→'URL' (F2), tokenizing and truncation (F6-F7) and the
+caps/repetition scores (F8-F10). @mention→'@USER' is a pass of the scrub
+chain (functions/scrub.py); the reference's cap of repeated @USER runs
+at 3 (F3) is not implemented: no filter step or driver key needs it.
 """
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 URL_RE = r"(https?://\S+|www\.\S+)"
-MENTION_RE = r"@\w+"
 
 
 def mask_urls(col: Column) -> Column:

@@ -882,10 +882,10 @@ def embedding_neardup_pairs(
     """Cosine ≥ threshold pairs. Brute force within blocks (exact); for
     table-scale use similarity.lsh_bucket first and feed buckets here.
 
-    Guardrail: without ``block_col`` the
-    ``a.k < b.k`` self-join is a BroadcastNestedLoop cartesian, so the
-    unblocked form refuses inputs larger than ``allow_unblocked_rows`` —
-    one cheap count up front instead of an O(n²) job at table scale."""
+    Guardrail: without ``block_col`` the ``a.k < b.k`` self-join is a
+    BroadcastNestedLoop cartesian, so the unblocked form refuses inputs
+    larger than ``allow_unblocked_rows`` — one cheap count up front
+    instead of an O(n²) job at table scale."""
     from ..functions.arrays import cosine
 
     if not -1 <= threshold <= 1:

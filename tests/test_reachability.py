@@ -91,23 +91,20 @@ def _uses(tree: ast.Module):
                 yield a.name, n.lineno
 
 
-def unreached(root: Path = ROOT, allowed=ALLOWED) -> list[str]:
+def unreached(allowed=ALLOWED) -> list[str]:
     """``module:name`` of every package top-level definition no product
     surface uses, minus ``allowed``."""
-    package = root / PACKAGE.name
-    trees = {p: ast.parse(p.read_text(), str(p)) for p in _py_files(package)}
-    for s in SURFACES:
-        if (root / s).exists():
-            trees.update({p: ast.parse(p.read_text(), str(p)) for p in _py_files(root / s)})
+    files = _py_files(PACKAGE) + [p for s in SURFACES for p in _py_files(ROOT / s)]
+    trees = {p: ast.parse(p.read_text(), str(p)) for p in files}
     uses: dict[str, list[tuple[Path, int]]] = {}
     for p, tree in trees.items():
-        if p.name == "__init__.py" and p.is_relative_to(package):
+        if p.name == "__init__.py" and p.is_relative_to(PACKAGE):
             continue
         for name, line in _uses(tree):
             uses.setdefault(name, []).append((p, line))
     dead = []
-    for p in sorted(q for q in trees if q.is_relative_to(package)):
-        rel = p.relative_to(package).as_posix()
+    for p in _py_files(PACKAGE):
+        rel = p.relative_to(PACKAGE).as_posix()
         for name, lo, hi in _definitions(trees[p]):
             if (rel, name) in allowed:
                 continue
