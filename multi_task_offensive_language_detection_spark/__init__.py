@@ -10,7 +10,8 @@ Spark pipeline per BASELINE.json's north_rule:
 - heuristic length / repetition / caps rules (F8-F10, P7)
 - regex PII + profanity scrubbing (F11-F12)
 - hierarchical OLID subtask A/B/C labeling (P3, taxonomy)
-- salted repartitioning against transcript-length skew (X1)
+- hash repartitioning on the unique clip id, one task per core, against
+  transcript-length skew (X1)
 - per-partition ledger checkpoint + lineage + counters (S9, §4.4)
 
 over tables of audio clip + transcript pairs

@@ -1,20 +1,26 @@
 """Vectorized n-gram hashing kernels (SURVEY.md F13) — pure numpy.
 
-One kernel per hash family, shared by training and scoring:
+A batch of texts is decoded once into a ``CodeBatch`` (one utf-32
+code-point buffer with row offsets), and one kernel per hash family
+reads it, shared by training and scoring:
 
-- ``char_ngram_hashes_flat`` — rolling FNV over char n-grams; langid
-  training, langid scoring and MinHash shingling;
-- ``token_hash_batch`` / ``token_hash_batch_ex`` + ``combine_hashes`` —
-  word unigrams and bigrams; LM training, perplexity scoring and lexicon
-  membership.
+- ``ngram_hashes`` — rolling FNV over char n-grams; langid training and
+  scoring and MinHash shingling (``char_ngram_hashes_flat``);
+- ``CodeBatch.tokens`` / ``segment_hashes`` + ``combine_hashes`` —
+  whitespace tokens and their unigram and bigram hashes; LM training,
+  perplexity scoring and lexicon membership (``token_hash_batch``);
+- ``sorted_distinct_per_row`` — each row's distinct hashes; MinHash
+  shingle sets and the LM's distinct-token count.
 
 Kernels return raw uint64 hashes; callers bucket them (``h % n_buckets``,
 the fastText-style hashing trick) so model artifacts are dense numpy
 arrays that broadcast cheaply to executors (no vocabulary dictionaries
-to pickle). Everything operates on batches (lists/Series of strings).
+to pickle).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -31,34 +37,97 @@ def hash_bytes_u64(data: bytes) -> int:
     return h
 
 
-def char_ngram_hashes_flat(texts: list[str], n: int) -> tuple[np.ndarray, np.ndarray]:
-    """Raw uint64 rolling-FNV hashes of all char n-grams of a text batch,
-    plus the row id of each n-gram — the one char kernel behind langid
-    training, langid scoring and MinHash shingling.
+class CodeBatch:
+    """A text batch as ONE utf-32 code-point buffer: row i is
+    ``codes[starts[i] : ends[i]]``, followed by one 0 slot (a NUL inside
+    a text is 0 too, so kernels find row ends by position). With
+    ``lower`` it holds each row's ``str.lower()``: one lower of the
+    joined batch, equal to the per-row lower because the separator is
+    neither cased nor case-ignorable (a final sigma sees the row end),
+    redone per row when a char lowers to several (U+0130). ``texts``
+    and ``src_lens`` are the rows as given."""
 
-    One rolling hash runs over ALL texts joined by a NUL separator (NULs
-    inside a text become ' '); windows crossing a separator are masked
-    out, so every row gets exactly the n-grams it would get alone, in
-    text order, and row ids come out sorted. Callers bucket the values
-    themselves (``h % n_buckets``); MinHash keeps full hash identity."""
-    if not texts:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
-    blob = "\x00".join(t.replace("\x00", " ") for t in texts)
-    codes = np.frombuffer(blob.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    if len(codes) < n:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
-    n_win = len(codes) - n + 1
-    h = np.full(n_win, _H_INIT, dtype=np.uint64)
+    __slots__ = ("texts", "codes", "starts", "lens", "ends", "src_lens")
+
+    def __init__(self, texts: list[str], lower: bool = False):
+        self.texts = texts
+        self.src_lens = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
+        self.lens = self.src_lens
+        blob = "\x00".join([*texts, ""])
+        if lower:
+            low = blob.lower()
+            if len(low) != len(blob):
+                rows = [t.lower() for t in texts]
+                self.lens = np.fromiter(map(len, rows), dtype=np.int64, count=len(rows))
+                low = "\x00".join([*rows, ""])
+            blob = low
+        self.codes = np.frombuffer(blob.encode("utf-32-le"), dtype=np.uint32)
+        self.ends = np.cumsum(self.lens + 1) - 1
+        self.starts = self.ends - self.lens
+
+    def __len__(self) -> int:
+        return len(self.texts)
+
+    def tokens(self) -> "Tokens":
+        """The rows' ``str.split()`` tokens (Unicode whitespace, so NBSP
+        splits) as buffer spans, with their hashes."""
+        word = ~_SPACE[np.minimum(self.codes, len(_SPACE) - 1)]
+        word[self.ends] = False  # row separators end a token
+        starts, lens = spans(word)
+        n_tok = np.diff(np.searchsorted(starts, self.starts), append=len(starts))
+        rows = np.repeat(np.arange(len(self), dtype=np.int64), n_tok)
+        return Tokens(starts, lens, rows, n_tok, segment_hashes(self.codes, starts, lens))
+
+
+class Tokens(NamedTuple):
+    """Whitespace tokens of a CodeBatch, in text order."""
+
+    starts: np.ndarray  # buffer position of each token's first char
+    lens: np.ndarray  # full token length
+    rows: np.ndarray  # row id per token (sorted)
+    n_tok: np.ndarray  # tokens per row
+    hashes: np.ndarray  # segment_hashes value per token
+
+
+def spans(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(start, length) of each maximal run of True in a bool array."""
+    edge = np.diff(mask.view(np.int8), prepend=np.int8(0), append=np.int8(0))
+    starts = np.flatnonzero(edge == 1)
+    return starts, np.flatnonzero(edge == -1) - starts
+
+
+#: str.split()'s separators: the code points where str.isspace() holds,
+#: all below U+3001 (tests pin the table against a scan of every code
+#: point); the last slot stands for everything above it
+_SPACE = np.zeros(0x3002, dtype=bool)
+_SPACE[[c for c in range(0x3001) if chr(c).isspace()]] = True
+
+
+def ngram_hashes(
+    codes: np.ndarray, starts: np.ndarray, lens: np.ndarray, n: int, stride: int = 1
+) -> tuple[np.ndarray, np.ndarray]:
+    """Rolling-FNV hashes of every ``stride``-th char n-gram of each span
+    ``codes[s : s + l]``, counted from the span start, span after span,
+    and the n-gram count per span — the one char n-gram kernel."""
+    counts = (np.maximum(lens - n + 1, 0) + stride - 1) // stride
+    first = np.cumsum(counts) - counts
+    win = np.repeat(starts - stride * first, counts) + stride * np.arange(int(counts.sum()))
+    h = np.full(len(win), _H_INIT, dtype=np.uint64)
     with np.errstate(over="ignore"):
         for k in range(n):
-            h = (h ^ codes[k : k + n_win]) * _H_MULT
-    sep = (codes == 0).astype(np.int64)
-    csum = np.concatenate(([0], np.cumsum(sep)))
-    valid = (csum[n:] - csum[:-n]) == 0
-    win_start = np.nonzero(valid)[0]
-    text_starts = np.concatenate(([0], np.nonzero(sep)[0] + 1))
-    row_ids = np.searchsorted(text_starts, win_start, side="right") - 1
-    return h[valid], row_ids
+            h = (h ^ codes[win + k]) * _H_MULT
+    return h, counts
+
+
+def char_ngram_hashes_flat(texts: list[str], n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Raw uint64 hashes of all char n-grams of a text batch (a NUL
+    inside a text hashes as ' '), row after row in text order, plus the
+    row id of each n-gram — langid training and MinHash shingling.
+    Callers bucket the values themselves (``h % n_buckets``); MinHash
+    keeps full hash identity."""
+    b = CodeBatch([t.replace("\x00", " ") for t in texts])
+    h, counts = ngram_hashes(b.codes, b.starts, b.lens, n)
+    return h, np.repeat(np.arange(len(b), dtype=np.int64), counts)
 
 
 #: position weights for the polynomial token hash: odd multiplier powers.
@@ -72,81 +141,75 @@ for _k in range(_TOKEN_PREFIX):
 _LEN_MIX = np.uint64(0xC2B2AE3D27D4EB4F)
 
 
-def token_hash_batch(tokens: list[str] | np.ndarray) -> np.ndarray:
-    """uint64 position-weighted polynomial hash over utf-32 code units of
-    each token (first 16 chars) — fully vectorized AND single-pass: one
-    encode of the concatenated batch, one weighted segment-sum via
-    ``np.add.reduceat`` over token boundaries, then a scalar avalanche.
-    This is the hot kernel of the perplexity gate; it replaced a 16-round
-    padded-matrix FNV loop (~16× the memory traffic) which itself
-    replaced a per-token Python loop (~50× slower still). Hash values are
-    deterministic per version — artifacts bucketed with it are rebuilt on
-    ARTIFACT_VERSION bumps (artifacts_build.py)."""
-    h, _ = token_hash_batch_ex(tokens, want_pure=False)
-    return h
-
-
-#: ASCII \w test table over utf-32 code units (Java-regex default classes)
-_WORDCHAR = np.zeros(128, dtype=bool)
-for _c in range(128):
-    _WORDCHAR[_c] = chr(_c).isalnum() and ord(chr(_c)) < 128 or _c == 0x5F
-
-
-def token_hash_batch_ex(
-    tokens: list[str] | np.ndarray, want_pure: bool = True
-) -> tuple[np.ndarray, np.ndarray | None]:
-    """(hashes, pure_word_mask) for a token batch.
-
-    ``pure_word_mask[i]`` is True when token i consists entirely of ASCII
-    ``\\w`` chars — i.e. the token IS a maximal word-char run, so lexicon
-    membership by hash equals the ``\\b(word)\\b`` regex semantic without
-    re-tokenizing (operators/scoring.py uses this to share the perplexity
-    gate's token stream). Purity is judged on the full token; hashing uses
-    the first 16 chars (prefix collisions are noise to a count-table LM).
-    """
-    n = len(tokens)
-    if n == 0:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=bool)
-    full_lens = np.fromiter((len(t) for t in tokens), dtype=np.int64, count=n)
-    clipped = [t[:_TOKEN_PREFIX] for t in tokens]
-    lens = np.minimum(full_lens, _TOKEN_PREFIX)
-    blob = "".join(clipped)
-    codes = np.frombuffer(blob.encode("utf-32-le"), dtype=np.uint32)
-    starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
-    offs = np.arange(len(codes), dtype=np.int64) - np.repeat(starts, lens)
+def segment_hashes(codes: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """uint64 position-weighted polynomial hash of each code-buffer span
+    ``codes[s : s + l]`` over its first 16 code points, length-mixed and
+    avalanched. One weighted segment-sum (``np.add.reduceat``) over the
+    clipped spans; prefix collisions are noise to a count-table LM. Hash
+    values are fixed per ``ARTIFACT_VERSION`` (artifacts_build.py)."""
+    clip = np.minimum(lens, _TOKEN_PREFIX)
+    seg0 = np.cumsum(clip) - clip
+    offs = np.arange(int(clip.sum()), dtype=np.int64) - np.repeat(seg0, clip)
+    vals = codes[np.repeat(starts, clip) + offs].astype(np.uint64) * _POLY_POW[offs]
+    h = np.zeros(len(lens), dtype=np.uint64)
+    nonempty = clip > 0
     with np.errstate(over="ignore"):
-        vals = codes.astype(np.uint64) * _POLY_POW[offs]
-        h = np.zeros(n, dtype=np.uint64)
-        nonempty = lens > 0
-        if len(codes):
-            sums = np.add.reduceat(vals, starts[nonempty])
-            h[nonempty] = sums
-        # mix in length + avalanche so short/padded sums disperse
-        h = (h ^ (lens.astype(np.uint64) * _LEN_MIX)) * np.uint64(_H_MULT)
+        if len(vals):
+            h[nonempty] = np.add.reduceat(vals, seg0[nonempty])
+        h = (h ^ (clip.astype(np.uint64) * _LEN_MIX)) * _H_MULT
         h ^= h >> np.uint64(33)
         h = h * np.uint64(_POLY_P)
         h ^= h >> np.uint64(29)
-    if not want_pure:
-        return h, None
-    # purity: every char (of the FULL token) is ASCII \w. Chars beyond the
-    # 16-char hash prefix still count against purity, so re-check those
-    # rare long tokens scalar-side.
-    is_w = np.zeros(len(codes), dtype=bool)
-    small = codes < 128
-    is_w[small] = _WORDCHAR[codes[small]]
-    pure = np.ones(n, dtype=bool)
-    if len(codes):
-        impure_counts = np.add.reduceat(
-            (~is_w).astype(np.int64), starts[nonempty]
-        )
-        pure[nonempty] = impure_counts == 0
-    long_toks = np.nonzero(full_lens > _TOKEN_PREFIX)[0]
-    for i in long_toks:
-        t = tokens[i]
-        pure[i] = pure[i] and all(
-            (c.isalnum() and ord(c) < 128) or c == "_" for c in t[_TOKEN_PREFIX:]
-        )
-    return h, pure
+    return h
+
+
+def token_hash_batch(tokens: list[str]) -> np.ndarray:
+    """``segment_hashes`` of each token of a list: the hash behind the
+    LM tables and the lexicons."""
+    b = CodeBatch(list(tokens))
+    return segment_hashes(b.codes, b.starts, b.lens)
+
+
+def sorted_distinct_per_row(h: np.ndarray, counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(each row's distinct values in ascending order, row after row;
+    distinct count per row) of uint64 values grouped by row, ``counts[r]``
+    of them for row r.
+
+    Each row is sorted on its own rather than the whole stream: the rows
+    already arrive grouped, so a global (row, value) lexsort would spend
+    most of its time re-deriving that order. Rows are padded into one
+    matrix per power-of-two count class, so every matrix holds fewer
+    than twice its rows' elements and one huge row cannot blow the
+    padding up for the rest of the batch. Padding is the uint64 max and
+    sorts last, so each row's first ``count`` sorted slots are exactly
+    its own values; a validity mask, not the pad value, marks them (a
+    real value may equal the pad)."""
+    nrows = len(counts)
+    distinct = np.zeros(nrows, dtype=np.int64)
+    if len(h) == 0:
+        return h, distinct
+    # count class: the exponent of the smallest power of two >= count
+    cls = np.frexp(np.maximum(counts, 1) - 1)[1]
+    elem_cls = np.repeat(cls, counts)
+    sorted_cls = []
+    for c in np.unique(cls[counts > 0]):
+        r = np.flatnonzero((cls == c) & (counts > 0))
+        valid = np.arange(1 << int(c)) < counts[r][:, None]
+        m = np.full(valid.shape, np.iinfo(np.uint64).max, dtype=np.uint64)
+        m[valid] = h[elem_cls == c]  # row-major order == stream order
+        m.sort(axis=1)
+        valid[:, 1:] &= m[:, 1:] != m[:, :-1]
+        distinct[r] = valid.sum(axis=1)
+        sorted_cls.append((r, m[valid]))
+    ends = np.cumsum(distinct)
+    out = np.empty(int(ends[-1]), dtype=np.uint64)
+    for r, vals in sorted_cls:
+        nd = distinct[r]
+        # ``vals`` holds the class's rows back to back: shift each row's
+        # run from its start there (cumsum(nd) - nd) to its start in
+        # ``out`` (ends[r] - nd)
+        out[np.repeat(ends[r] - np.cumsum(nd), nd) + np.arange(len(vals))] = vals
+    return out, distinct
 
 
 def combine_hashes(h1: np.ndarray, h2: np.ndarray) -> np.ndarray:

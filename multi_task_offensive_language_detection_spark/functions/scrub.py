@@ -56,6 +56,11 @@ _GUARDS = {
 }
 
 
+#: a superset of every guard above: '@' (EMAIL, @USER), an ASCII digit
+#: (IP, SSN, PHONE; Java's \d is ASCII) or http/www. (URL)
+_ANY_PII = r"(?i)[@0-9]|http|www\."
+
+
 def scrub_pii(col: Column) -> Column:
     """F11 — apply the PII chain in order; pure Column expression.
 
@@ -69,12 +74,18 @@ def scrub_pii(col: Column) -> Column:
     is the final pass), so the output is identical — and each chain step
     references the previous expression twice instead of three times,
     keeping the generated code well under the codegen huge-method cliff
-    (a deeper variant measurably fell off it: whole job +45%)."""
+    (a deeper variant measurably fell off it: whole job +45%).
+
+    One outer guard (``_ANY_PII``) skips the whole chain for the rows
+    that hold none of ``@``, an ASCII digit, ``http`` or ``www.``. Every
+    inner guard implies it, so the output is the same; on the bench
+    clips it passes about 12% of rows, and the scrub alone over 100k
+    cached clips (noop write, 4 cores) went 0.26 → 0.24 s."""
     out = col
     for pat, repl in PII_CHAIN:
         guard = _GUARDS[repl]
         out = F.when(guard(col), F.regexp_replace(out, pat, repl)).otherwise(out)
-    return out
+    return F.when(col.rlike(_ANY_PII), out).otherwise(col)
 
 
 def scrub_profanity(col: Column, words: tuple[str, ...] = PROFANITY) -> Column:

@@ -116,18 +116,10 @@ def _flat_shingle_hashes(texts: pd.Series, n: int):
     (300 small strings/row of serde vs one rolling hash); the compact
     int64 HASH arrays do cross once per document in
     minhash64_band_features_udf, which is what lets verify run JVM-side
-    instead of re-shingling texts per candidate pair.
-
-    Dedup sorts each row's hashes in place rather than the whole stream:
-    the rows already arrive grouped, so a global (row, hash) lexsort
-    would spend most of its time re-deriving that order. Rows are padded
-    into one matrix per power-of-two count class, so every matrix holds
-    fewer than twice its rows' elements and one huge text cannot blow
-    the padding up for the rest of the batch. Padding is the uint64 max
-    and sorts last, so each row's first ``count`` sorted slots are
-    exactly its own hashes; a validity mask, not the pad value, marks
-    them (a real hash may equal the pad)."""
-    from ..functions.hashing import char_ngram_hashes_flat
+    instead of re-shingling texts per candidate pair. Each row's
+    shingles are sorted and deduped on their own
+    (functions.hashing.sorted_distinct_per_row)."""
+    from ..functions.hashing import char_ngram_hashes_flat, sorted_distinct_per_row
 
     tl = [str(t) for t in texts.fillna("")]
     h, rows = char_ngram_hashes_flat(tl, n)
@@ -137,29 +129,7 @@ def _flat_shingle_hashes(texts: pd.Series, n: int):
         # the THIRD slot (an all-short/empty batch otherwise fed the empty
         # rows ndarray to np.full((nrows, 64), ...) in _minhash64)
         return h, rows, nrows
-    counts = np.bincount(rows, minlength=nrows)
-    # count class: the exponent of the smallest power of two >= count
-    cls = np.frexp(np.maximum(counts, 1) - 1)[1]
-    elem_cls = cls[rows]
-    distinct = np.zeros(nrows, dtype=np.int64)
-    sorted_cls = []
-    for c in np.unique(cls[counts > 0]):
-        r = np.nonzero((cls == c) & (counts > 0))[0]
-        valid = np.arange(1 << int(c)) < counts[r][:, None]
-        m = np.full(valid.shape, np.iinfo(np.uint64).max, dtype=np.uint64)
-        m[valid] = h[elem_cls == c]  # row-major order == stream order
-        m.sort(axis=1)
-        valid[:, 1:] &= m[:, 1:] != m[:, :-1]
-        distinct[r] = valid.sum(axis=1)
-        sorted_cls.append((r, m[valid]))
-    ends = np.cumsum(distinct)
-    out = np.empty(int(ends[-1]), dtype=np.uint64)
-    for r, vals in sorted_cls:
-        nd = distinct[r]
-        # ``vals`` holds the class's rows back to back: shift each row's
-        # run from its start there (cumsum(nd) - nd) to its start in
-        # ``out`` (ends[r] - nd)
-        out[np.repeat(ends[r] - np.cumsum(nd), nd) + np.arange(len(vals))] = vals
+    out, distinct = sorted_distinct_per_row(h, np.bincount(rows, minlength=nrows))
     return out, np.repeat(np.arange(nrows, dtype=rows.dtype), distinct), nrows
 
 
@@ -876,39 +846,23 @@ def embedding_neardup_pairs(
     key_col: str,
     vec_col: str,
     threshold: float = 0.95,
-    block_col: str | None = None,
-    allow_unblocked_rows: int = 100_000,
+    *,
+    block_col: str,
 ) -> DataFrame:
-    """Cosine ≥ threshold pairs. Brute force within blocks (exact); for
-    table-scale use similarity.lsh_bucket first and feed buckets here.
-
-    Guardrail: without ``block_col`` the ``a.k < b.k`` self-join is a
-    BroadcastNestedLoop cartesian, so the unblocked form refuses inputs
-    larger than ``allow_unblocked_rows`` — one cheap count up front
-    instead of an O(n²) job at table scale."""
+    """Cosine ≥ threshold pairs, brute force within each ``block_col``
+    block (exact). For table scale, block with similarity.lsh_bucket
+    first; there is no unblocked form (an ``a.k < b.k`` self-join is an
+    O(n²) cartesian)."""
     from ..functions.arrays import cosine
 
     if not -1 <= threshold <= 1:
         raise ValueError(f"threshold={threshold}: cosine lies in [-1, 1]")
-    if block_col is None:
-        n_rows = df.count()
-        if n_rows > allow_unblocked_rows:
-            raise ValueError(
-                f"embedding_neardup_pairs without block_col is O(n^2): got "
-                f"{n_rows} rows > allow_unblocked_rows={allow_unblocked_rows}. "
-                "Pass block_col (e.g. a similarity.lsh_bucket column)."
-            )
     s = df.select(
-        F.col(key_col).alias("k"),
-        F.col(vec_col).alias("v"),
-        *( [F.col(block_col).alias("blk")] if block_col else [] ),
+        F.col(key_col).alias("k"), F.col(vec_col).alias("v"), F.col(block_col).alias("blk")
     )
     a, b = s.alias("a"), s.alias("b")
-    cond = F.col("a.k") < F.col("b.k")
-    if block_col:
-        cond = cond & (F.col("a.blk") == F.col("b.blk"))
     return (
-        a.join(b, cond)
+        a.join(b, (F.col("a.k") < F.col("b.k")) & (F.col("a.blk") == F.col("b.blk")))
         .select(
             F.col("a.k").alias("k1"),
             F.col("b.k").alias("k2"),

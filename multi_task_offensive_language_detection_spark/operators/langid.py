@@ -6,7 +6,7 @@ log-probability matrix per n-gram order, trained offline by
 ``artifacts_build.py`` on the engine's deterministic multilingual corpus
 and shipped as an ``.npz`` broadcast artifact (the Spark analog of the
 reference's torch checkpoint, SURVEY.md S5). Training and scoring share
-one hash kernel (``functions.hashing.char_ngram_hashes_flat``).
+one hash kernel (``functions.hashing.ngram_hashes``).
 
 Scoring runs only inside the fused scoring UDF
 (``operators/scoring.py``, one Arrow boundary for every model), which
@@ -19,7 +19,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..functions.hashing import char_ngram_hashes_flat
+from ..functions.hashing import CodeBatch, char_ngram_hashes_flat, ngram_hashes
 
 NGRAM_ORDERS = (3,)
 N_BUCKETS = 1 << 16
@@ -81,40 +81,47 @@ class LangidModel:
             prior=z["prior"],
         )
 
-    def score_batch(self, texts: pd.Series) -> pd.DataFrame:
-        """Batch argmax language + posterior confidence — fully vectorized:
-        ONE rolling hash over the whole Arrow batch, per-row log-lik sums
-        via bincount, no Python loop over rows."""
-        tl = [str(t)[:MAX_CHARS].lower() for t in texts.fillna("")]
-        n_rows = len(tl)
+    def score_batch(self, texts: CodeBatch | pd.Series) -> pd.DataFrame:
+        """Batch argmax language + posterior confidence of each row's
+        ``text[:MAX_CHARS].lower()`` — fully vectorized over a lowered
+        CodeBatch (a Series is lowered into one first): one hash per
+        sampled char n-gram, per-row log-lik sums by ``reduceat``, no
+        Python loop over rows."""
+        b = texts if isinstance(texts, CodeBatch) else CodeBatch(texts.fillna("").tolist(), lower=True)
+        n_rows = len(b)
+        codes, starts = b.codes, b.starts
+        # the cut comes before the lower: the buffer's prefix for an ASCII
+        # row, but a non-ASCII one (a final sigma, a multi-char lower)
+        # has its cut prefix lowered on its own and appended
+        cut = np.where(b.src_lens > MAX_CHARS, MAX_CHARS, b.lens)
+        own = [i for i in np.flatnonzero(b.src_lens > MAX_CHARS) if not b.texts[i].isascii()]
+        if own:
+            extra = CodeBatch([b.texts[i][:MAX_CHARS] for i in own], lower=True)
+            starts = starts.copy()
+            starts[own] = extra.starts + len(codes)
+            cut[own] = extra.lens
+            codes = np.concatenate((codes, extra.codes))
         ll = np.tile(self.prior.astype(np.float64)[:, None], (1, n_rows))
         n_feats = np.zeros(n_rows, dtype=np.int64)
+        codes = np.where(codes == 0, 32, codes)  # a NUL hashes as ' '
         for n in NGRAM_ORDERS:
-            h, rows = char_ngram_hashes_flat(tl, n)
-            if len(h) == 0:
-                continue
             # stride-2 sampling: half the n-grams carry far more signal
             # than the decision needs (confidences sit at ~1.0) and the
             # scorer is bandwidth-bound — sampling halves memory traffic.
             # The stride restarts at each row's first n-gram, so a row
             # keeps the same n-grams whatever rows precede it in the batch.
-            first = np.searchsorted(rows, np.arange(n_rows))
-            keep = (np.arange(len(rows)) - first[rows]) % 2 == 0
-            h, rows = h[keep], rows[keep]
+            h, counts = ngram_hashes(codes, starts, cut, n, stride=2)
+            if len(h) == 0:
+                continue
+            first = np.cumsum(counts) - counts
             buckets = (h % np.uint64(N_BUCKETS)).astype(np.int64)
             gathered = self.logp_t[n][buckets]  # (W, L) float32, contiguous rows
-            # segment-sum via reduceat over NONEMPTY rows only (rows are
-            # sorted by construction). Boundaries come from cumsum of the
-            # per-row counts restricted to rows that actually have features
-            # — clamping an end-of-array boundary would instead truncate
-            # the last feature-bearing row whenever a batch ends with
-            # featureless rows, making scores batch-composition-dependent.
-            counts = np.bincount(rows, minlength=n_rows)
-            nonempty = np.nonzero(counts > 0)[0]
-            if len(nonempty):
-                bounds_all = np.concatenate(([0], np.cumsum(counts)))[:-1]
-                seg = np.add.reduceat(gathered, bounds_all[nonempty], axis=0)
-                ll[:, nonempty] += seg.T
+            # segment-sum via reduceat over NONEMPTY rows only: a clamped
+            # end-of-array boundary would truncate the last feature-bearing
+            # row whenever a batch ends with featureless rows
+            nonempty = np.flatnonzero(counts)
+            seg = np.add.reduceat(gathered, first[nonempty], axis=0)
+            ll[:, nonempty] += seg.T
             n_feats += counts
         # length-normalized posterior (softmax over mean log-lik, sharpened)
         z = ll / np.maximum(n_feats, 1)[None, :]

@@ -18,8 +18,8 @@ quality-filter semantic the north_rule asks for — not next-word modeling.
 Trained offline by artifacts_build.py on the engine's English corpus
 (includes the scrub placeholder tokens so post-scrub transcripts score
 over a fully known vocabulary); shipped as .npz broadcast artifact.
-Training and scoring share one tokenization (``_token_stream``) and one
-hash kernel (``functions.hashing.token_hash_batch`` + ``combine_hashes``).
+Training and scoring share one tokenization and hash kernel
+(``functions.hashing.CodeBatch.tokens`` + ``combine_hashes``).
 
 Scoring runs only inside the fused scoring UDF
 (``operators/scoring.py``), which loads the artifact once per Python
@@ -31,21 +31,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..functions.hashing import combine_hashes, token_hash_batch, token_hash_batch_ex
+from ..functions.hashing import CodeBatch, combine_hashes, sorted_distinct_per_row
 
 UNI_BUCKETS = 1 << 18
 BI_BUCKETS = 1 << 20
 BACKOFF = 0.4
 P_UNK = 1e-9
-
-
-def _token_stream(texts) -> tuple[list[str], np.ndarray, np.ndarray]:
-    """(flat lowercased whitespace tokens, tokens per row, row id per
-    token) of a batch of non-null texts."""
-    tok_lists = [str(t).lower().split() for t in texts]
-    n_tok = np.fromiter(map(len, tok_lists), dtype=np.int64, count=len(tok_lists))
-    flat = [t for toks in tok_lists for t in toks]
-    return flat, n_tok, np.repeat(np.arange(len(tok_lists)), n_tok)
 
 
 class NgramLM:
@@ -58,12 +49,12 @@ class NgramLM:
     def train(cls, texts: list[str]) -> "NgramLM":
         """Unigram and same-row bigram bucket counts — one pass of the
         scoring kernel over the whole corpus's token stream."""
-        flat, _, rows = _token_stream(texts)
-        h = token_hash_batch(flat)
+        tok = CodeBatch(texts, lower=True).tokens()
+        h, rows = tok.hashes, tok.rows
         uni = np.bincount((h % np.uint64(UNI_BUCKETS)).astype(np.int64), minlength=UNI_BUCKETS)
         g = combine_hashes(h[:-1], h[1:])[rows[:-1] == rows[1:]]
         bi = np.bincount((g % np.uint64(BI_BUCKETS)).astype(np.int64), minlength=BI_BUCKETS)
-        return cls(uni, bi, len(flat))
+        return cls(uni, bi, len(h))
 
     def save(self, path: str) -> None:
         np.savez_compressed(path, uni=self.uni, bi=self.bi, total=np.int64(self.total))
@@ -76,39 +67,29 @@ class NgramLM:
     def ppl(self, text: str) -> float:
         return float(self.ppl_stats_batch(pd.Series([text]))[0][0])
 
-    def ppl_stats_batch(self, texts: pd.Series, return_stream: bool = False):
-        """Batch Stupid-Backoff perplexity — one vectorized hash pass over
-        the flattened token stream of the whole Arrow batch, per-row
-        reduction via bincount. No Python loop beyond tokenization.
+    def ppl_stats_batch(self, texts: CodeBatch | pd.Series, return_stream: bool = False):
+        """Batch Stupid-Backoff perplexity of each row's lowered
+        ``str.split()`` tokens — one vectorized pass over the flattened
+        token stream of a lowered CodeBatch (a Series is lowered into one
+        first), per-row reduction via bincount. No Python loop.
 
         Returns ``(ppl, n_tokens, rep_tok_ratio)`` ndarrays: the token
-        stream is already flattened and hashed for scoring, so the
-        whitespace-token count and the token-repeat ratio
-        (1 − distinct/total, distinct by token hash — 16-char-prefix
-        exact, see token_hash_batch) fall out of the same pass. The
-        pipeline reads them from here instead of paying a second JVM
-        split + array_distinct over the same strings.
+        stream is already split and hashed for scoring, so the token
+        count and the token-repeat ratio (1 − distinct/total, distinct
+        by token hash — 16-char-prefix exact, see segment_hashes) fall
+        out of the same pass.
 
-        With ``return_stream`` a 4th element ``(flat_tokens, hashes,
-        row_ids, pure_word_mask)`` is returned so downstream lexicon
-        matching (operators/scoring.py) reuses this tokenization+hash
-        pass instead of paying its own."""
-        flat, n_tok, rows = _token_stream(texts.fillna(""))
-        n_rows = len(n_tok)
-        if not flat:
-            empty = (
-                np.full(n_rows, np.inf),
-                n_tok,
-                np.zeros(n_rows, dtype=np.float64),
-            )
-            if return_stream:
-                return (*empty, (flat, np.empty(0, np.uint64), np.empty(0, np.int64), np.empty(0, bool)))
-            return empty
-        h, pure = token_hash_batch_ex(flat, want_pure=return_stream)
+        With ``return_stream`` a 4th element ``(batch, tokens)`` is
+        returned so the lexicon signals (operators/scoring.py) reuse this
+        tokenization and hash pass instead of paying their own."""
+        b = texts if isinstance(texts, CodeBatch) else CodeBatch(texts.fillna("").tolist(), lower=True)
+        tok = b.tokens()
+        h, rows, n_tok = tok.hashes, tok.rows, tok.n_tok
+        n_rows = len(b)
         c1 = self.uni[(h % np.uint64(UNI_BUCKETS)).astype(np.int64)].astype(np.float64)
         p = np.where(c1 > 0, BACKOFF * c1 / self.total, BACKOFF * P_UNK)
 
-        if len(flat) >= 2:
+        if len(h) >= 2:
             same_row = rows[:-1] == rows[1:]
             g = combine_hashes(h[:-1], h[1:])
             c2 = self.bi[(g % np.uint64(BI_BUCKETS)).astype(np.int64)].astype(np.float64)
@@ -128,16 +109,9 @@ class NgramLM:
         sums = np.bincount(rows, weights=logs, minlength=n_rows)
         with np.errstate(divide="ignore", invalid="ignore"):
             out = np.exp(-sums / np.maximum(n_tok, 1))
+            rep = 1.0 - sorted_distinct_per_row(h, n_tok)[1] / n_tok
         out[n_tok == 0] = np.inf
-
-        # distinct tokens per row from the sorted (row, hash) stream
-        order = np.lexsort((h, rows))
-        hs, rs = h[order], rows[order]
-        first = np.concatenate(([True], (hs[1:] != hs[:-1]) | (rs[1:] != rs[:-1])))
-        uniq = np.bincount(rs[first], minlength=n_rows)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            rep = 1.0 - uniq / n_tok
         rep[n_tok == 0] = 0.0
         if return_stream:
-            return out, n_tok, rep, (flat, h, rows, pure)
+            return out, n_tok, rep, (b, tok)
         return out, n_tok, rep

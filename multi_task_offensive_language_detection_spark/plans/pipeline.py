@@ -3,20 +3,22 @@
 Plan shape (deliberate — see §4 of SURVEY.md):
 
     scan (partition-pruned to pending parts, column-pruned: never 'bytes')
-      → salted repartition                       [the ONLY wide stage]
+      → hash repartition on the unique clip_id   [the ONLY wide stage]
       → native projection: PII scrub — the single JVM string rebuild
                                                   [WholeStageCodegen]
       → ONE fused ArrowEvalPython stage: normalization + langid +
         perplexity + token metrics + caps/char-run stats + profanity/
-        taxonomy lexicon signals, riding one tokenize+hash pass and one
-        utf-32 decode                             [one Arrow boundary]
+        taxonomy lexicon signals, all reading one code-point buffer
+        per batch                                 [one Arrow boundary]
       → fused native projection: scrub output + labels + keep/drop
         when-chain                                [narrow]
       → partitioned write + per-part atomic commit + ledger
 
-The scoring path is shuffle-free after the salt; counters are computed by
-re-reading the (small, bytes-free) staged output rather than caching the
-scored frame — at 10^12 rows a cache is impossible, a cheap re-scan isn't.
+The scoring stage runs one task per core: each Python task pays a fixed
+cost outside the UDF (see ``run_clips_pipeline``), so more tasks than
+cores only add it. Counters are computed by re-reading the (small,
+bytes-free) staged output rather than caching the scored frame — at
+10^12 rows a cache is impossible, a cheap re-scan isn't.
 """
 
 from __future__ import annotations
@@ -49,15 +51,22 @@ OUTPUT_COLS = [
     "part_id",
 ]
 
+#: the staged output columns the counter rescan aggregates
+_COUNTER_SCHEMA = "keep boolean, drop_reason string, scrub_edits int, part_id int"
+
 
 def salted_repartition(df: DataFrame, num_partitions: int, key: str = "clip_id") -> DataFrame:
-    """X1 — defeat transcript-length skew by hashing the unique key into
-    4× ``num_partitions`` uniform salts and shuffling on the salt. AQE
-    handles skewed JOINs; this equalizes map-stage bytes/task, which AQE
-    does not (SURVEY.md §4.3)."""
-    return df.repartition(
-        num_partitions, F.pmod(F.xxhash64(F.col(key)), F.lit(num_partitions * 4))
-    )
+    """X1 — spread rows evenly over ``num_partitions`` by hash-partitioning
+    on the unique key itself, whatever the input split sizes or the
+    transcript lengths. AQE handles skewed JOINs; this equalizes the
+    scoring stage's rows per task, which AQE does not (SURVEY.md §4.3).
+
+    On 50k unique keys into 8 partitions the largest partition holds
+    1.02x the mean rows. The former salt (``pmod(xxhash64(key), 4n)``,
+    shuffled on the salt) hashed its 4n values a second time into n
+    partitions, so each partition drew 2 to 8 salts: 2.02x the mean.
+    The name is kept for the callers that import it."""
+    return df.repartition(num_partitions, F.col(key))
 
 
 def score_transcripts(
@@ -213,7 +222,12 @@ def run_clips_pipeline(
         return {"processed_parts": 0, "skipped_parts": len(all_parts), **ledger.totals()}
 
     t0 = time.monotonic()
-    n_shuffle = num_partitions or spark.sparkContext.defaultParallelism * 2
+    # one scoring task per core: besides the UDF, each Python task costs
+    # 0.1-0.15 core-s of fixed worker work on a 4-core box (PySpark's
+    # per-task importlib.invalidate_caches() rescans pyspark.zip once per
+    # zipimporter, plus task set-up and teardown), so more tasks than
+    # cores only add that cost once the rows per task are even
+    n_shuffle = num_partitions or spark.sparkContext.defaultParallelism
     clips = prune_to_parts(read_clips(spark, in_path), pending)
     # column pruning: the scoring path never touches 'bytes'
     clips = clips.select("clip_id", "dur_ms", "transcript", "part_id")
@@ -223,10 +237,10 @@ def run_clips_pipeline(
     staging = out_path.rstrip("/") + ".staging"
     shutil.rmtree(staging, ignore_errors=True)
     # cluster output rows by part_id before the dynamic-partition write:
-    # without this every salted task writes a file into every part dir
+    # without this every scoring task writes a file into every part dir
     # (tasks × parts files — a small-files disaster at cluster scale);
     # with it each part is written by one task → one file per part.
-    # Scoring still runs in the salted stage, upstream of this exchange.
+    # Scoring still runs in the clip_id stage, upstream of this exchange.
     (
         scored.select(*OUTPUT_COLS)
         .repartition("part_id")
@@ -235,10 +249,12 @@ def run_clips_pipeline(
         .parquet(staging)
     )
 
-    # counters from the staged (bytes-free, columnar) output — cheap re-scan
+    # counters from the staged (bytes-free, columnar) output — cheap
+    # re-scan of the four columns they need, with their schema given
     stats = {
         r["part_id"]: r
-        for r in spark.read.parquet(staging)
+        for r in spark.read.schema(_COUNTER_SCHEMA)
+        .parquet(staging)
         .groupBy("part_id")
         .agg(
             F.count(F.lit(1)).alias("n_in"),

@@ -16,11 +16,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schema import CLIPS_SCHEMA
+
 
 def read_clips(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
+    """The clips table with its declared schema: no inference job runs
+    to read Parquet footers before the scan."""
     if fmt == "iceberg":  # pragma: no cover - requires iceberg jars
         return spark.read.format("iceberg").load(path)
-    return spark.read.parquet(path)
+    return spark.read.schema(CLIPS_SCHEMA).parquet(path)
 
 
 def write_clips(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite") -> None:

@@ -1,17 +1,20 @@
 """Reference kernel for the fused scoring UDF's lexicon signals
-(operators/scoring.py LexiconSignals.score_stream). Test-only: it builds
-its own \\w+-run stream from the text instead of reusing the LM's
-whitespace-token stream, so equality with score_stream pins the reuse."""
+(operators/scoring.py LexiconSignals.score_stream, minus its ``@user``
+bit). Test-only: it builds its own \\w+-run stream from the text instead
+of reusing the LM's whitespace-token stream, so equality with
+score_stream pins the reuse."""
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 
 from multi_task_offensive_language_detection_spark.functions.hashing import token_hash_batch
-from multi_task_offensive_language_detection_spark.operators.scoring import (
-    _WORD_RUN,
-    LexiconSignals,
-)
+from multi_task_offensive_language_detection_spark.operators.scoring import LexiconSignals
+
+#: maximal ASCII \w runs (re.ASCII = Java regex default classes)
+_WORD_RUN = re.compile(r"\w+", re.ASCII)
 
 
 def lexicon_score_standalone(lex: LexiconSignals, texts: list[str]):

@@ -142,20 +142,19 @@ def test_char_shingles_short_texts_yield_empty(spark):
 
 
 def test_embedding_neardup_refuses_unblocked_at_scale(spark):
+    """There is no unblocked form: ``block_col`` is required, so an
+    O(n²) self-join cannot be asked for. Blocked, the pairs come only
+    from inside a block."""
     df = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(10)], "vec_id long, embedding array<float>"
     )
-    with pytest.raises(ValueError, match="block_col"):
-        dedup.embedding_neardup_pairs(
-            df, "vec_id", "embedding", allow_unblocked_rows=3
-        )
-    # blocked form is exempt from the guard (bounded per block by design)
+    with pytest.raises(TypeError, match="block_col"):
+        dedup.embedding_neardup_pairs(df, "vec_id", "embedding")
     blocked = dedup.embedding_neardup_pairs(
         df.withColumn("blk", F.pmod("vec_id", F.lit(2))),
         "vec_id", "embedding", threshold=0.99, block_col="blk",
-        allow_unblocked_rows=3,
-    )
-    assert blocked.count() > 0
+    ).collect()
+    assert blocked and all((r["k2"] - r["k1"]) % 2 == 0 for r in blocked)
 
 
 def test_lsh_short_texts_excluded_and_buckets_capped(spark, docs):
@@ -741,7 +740,7 @@ def _vectors(spark):
 _NEARDUP_OPS = {
     "simhash": lambda spark, df, **kw: dedup.simhash_pairs(df, "doc_id", "text", **kw),
     "embedding": lambda spark, df, **kw: dedup.embedding_neardup_pairs(
-        _vectors(spark), "vec_id", "embedding", **kw
+        _vectors(spark), "vec_id", "embedding", block_col="vec_id", **kw
     ),
 }
 

@@ -48,6 +48,26 @@ def test_single_python_stage(scored_plan):
     assert "BatchEvalPython" not in scored_plan  # no row-at-a-time Python
 
 
+def test_flagship_scores_in_one_task_per_core(spark, clips_fixture, tmp_path):
+    """The flagship job's scoring exchange hash-partitions on the unique
+    clip_id into defaultParallelism partitions: one balanced Python task
+    per core, each paying the per-task worker cost once."""
+    from multi_task_offensive_language_detection_spark.plans.pipeline import (
+        run_clips_pipeline,
+    )
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = store.executionsList().size()
+    run_clips_pipeline(spark, clips_fixture[0], str(tmp_path / "out"), str(tmp_path / "ledger"))
+    runs = store.executionsList()
+    plans = [runs.apply(i).physicalPlanDescription() for i in range(before, runs.size())]
+    scoring = [p for p in plans if "ArrowEvalPython" in p]
+    assert len(scoring) == 1, plans
+    n = spark.sparkContext.defaultParallelism
+    exchanges = set(re.findall(r"hashpartitioning\((\w+)#\d+, (\d+)\)", scoring[0]))
+    assert exchanges == {("clip_id", str(n)), ("part_id", str(n))}, scoring[0]
+
+
 def test_partition_pruning(scored_plan):
     assert re.search(r"PartitionFilters: \[part_id.* IN \(1,2,3\)\]", scored_plan)
 

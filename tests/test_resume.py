@@ -200,3 +200,15 @@ def test_snapshot_sink_resume_and_time_travel(spark, artifacts, small_clips, tmp
     assert store.read(spark, as_of=snaps[0]["snapshot_id"]).count() == 400
     for k in ("n_in", "n_keep", "n_scrub_edits"):
         assert s3[k] == s1[k], f"counter {k} drifted across snapshot resume"
+
+
+def test_read_clips_schema_equals_inferred(spark, clips_fixture):
+    """read_clips declares the clips schema instead of inferring it from
+    Parquet footers: same column names, types and rows."""
+    from multi_task_offensive_language_detection_spark.sources.clips import read_clips
+
+    declared = read_clips(spark, clips_fixture[0])
+    inferred = spark.read.parquet(clips_fixture[0])
+    assert declared.dtypes == inferred.dtypes
+    assert declared.exceptAll(inferred).count() == 0
+    assert inferred.exceptAll(declared).count() == 0

@@ -18,7 +18,7 @@ from multi_task_offensive_language_detection_spark.operators.perplexity import N
 
 
 def lower_guarded(col):
-    """The JVM lowercasing _normalize_batch replicates: lower() copies the
+    """The JVM lowercasing _normalize_batch stands in for: lower() copies the
     string even when it's already lowercase, so an uppercase search
     guards it and all-lowercase rows pass through."""
     from pyspark.sql import functions as F
@@ -117,8 +117,8 @@ def test_ppl_stats_stream_edge_cases(models):
     # empty batch
     ppl, n_tok, rep, stream = lm.ppl_stats_batch(pd.Series([], dtype=object), return_stream=True)
     assert len(ppl) == 0 and len(n_tok) == 0 and len(rep) == 0
-    flat, h, rows, pure = stream
-    assert flat == [] and len(h) == 0
+    batch, tok = stream
+    assert len(batch) == 0 and len(tok.hashes) == 0
     # all-featureless batch
     ppl, n_tok, rep, stream = lm.ppl_stats_batch(pd.Series(["", None, "   "]), return_stream=True)
     assert np.isinf(ppl).all()
@@ -134,7 +134,7 @@ def test_lexicon_stream_equals_standalone_on_punctuated_batch(models):
     from multi_task_offensive_language_detection_spark.operators.scoring import (
         LexiconSignals,
     )
-    from tests.lexicon_reference import lexicon_score_standalone
+    from tests.scoring_reference import signals_ref
 
     _, lm = models
     lex = LexiconSignals()
@@ -142,7 +142,7 @@ def test_lexicon_stream_equals_standalone_on_punctuated_batch(models):
         "damn, you idiots!!", "(scum)", "plain clean text", "",
         "trash...garbage", "you're a moron", "@user people here",
     ]
-    p_ref, s_ref = lexicon_score_standalone(lex, texts)
+    p_ref, s_ref = signals_ref(lex, texts)
     _, _, _, stream = lm.ppl_stats_batch(pd.Series(texts), return_stream=True)
     p_st, s_st = lex.score_stream(len(texts), *stream)
     assert list(p_ref) == list(p_st)
@@ -153,6 +153,14 @@ def test_lexicon_stream_equals_standalone_on_punctuated_batch(models):
 # The normalization and char stats moved from JVM Column expressions into
 # the fused Arrow UDF for bandwidth reasons; these tests pin the Python
 # kernels to the exact semantics of the expressions they replaced.
+
+def _rows(batch) -> list[str]:
+    """The lowered rows a CodeBatch holds."""
+    return [
+        batch.codes[s:e].tobytes().decode("utf-32-le")
+        for s, e in zip(batch.starts, batch.ends, strict=True)
+    ]
+
 
 _ADVERSARIAL = [
     "",
@@ -221,9 +229,9 @@ def test_normalize_batch_matches_jvm_expression(spark):
             "i", FT.normalize_ws(lower_guarded(F.col("t"))).alias("n")
         ).collect()
     }
-    got = _normalize_batch(pd.Series(_ADVERSARIAL))
+    got = _rows(_normalize_batch(pd.Series(_ADVERSARIAL)))
     for i in range(len(_ADVERSARIAL)):
-        assert got.iloc[i] == jvm[i], (i, repr(_ADVERSARIAL[i]), repr(got.iloc[i]), repr(jvm[i]))
+        assert got[i] == jvm[i].lower(), (i, repr(_ADVERSARIAL[i]), repr(got[i]), repr(jvm[i]))
 
 
 def test_null_text_scores_as_empty(spark):
@@ -288,4 +296,91 @@ def test_char_stats_property_random_strings(spark, s):
     ).collect()[0]
     caps, runs, reps = char_stats_batch([s], 5)
     assert caps[0] == r["caps"] and bool(runs[0]) == r["run"] and reps[0] == r["rep"]
-    assert _normalize_batch(pd.Series([s])).iloc[0] == r["n"]
+    assert _rows(_normalize_batch(pd.Series([s]))) == [r["n"].lower()]
+
+
+# --- one code-point buffer per batch ≡ per-row str kernels -----------------
+
+#: the traps of scoring from one lowered buffer: Unicode whitespace that
+#: str.split() breaks on and the Java-\\s collapse keeps (NBSP, U+2003,
+#: U+001C), the ASCII-guarded lower (a row with only non-ASCII capitals),
+#: multi-char and context-dependent lowers at langid's 128-char cut
+#: ('İ', final sigma), NUL, astral chars, \\w runs inside punctuated
+#: tokens and the '@user' mention
+_TRAP_CHARS = list("aAbBxXuserUSER @_.,!'-09\t\n\x0b\f\r\x00") + [
+    "\xa0", "\u2003", "\x1c", "\x85", "İ", "Σ", "σ", "ς", "Ä", "ä", "é",
+    "\u0307", "😀",
+]
+_TRAP_WORDS = ["@user", "@USER", "damn", "You", "THEM", "İstanbul", "ΟΔΟΣ", "x" * 20]
+
+
+@given(
+    st.lists(
+        st.one_of(
+            st.none(),
+            st.text(alphabet=st.sampled_from(_TRAP_CHARS), max_size=40),
+            st.lists(
+                st.one_of(
+                    st.sampled_from(_TRAP_WORDS),
+                    st.text(alphabet=st.sampled_from(_TRAP_CHARS), max_size=6),
+                ),
+                max_size=60,
+            ).map(" ".join),
+        ),
+        max_size=8,
+    )
+)
+@settings(max_examples=300, deadline=None)
+def test_fused_kernels_match_per_row_reference(models, texts):
+    """langid, the LM, the lexicon signals and '@user' read one lowered
+    CodeBatch per batch; every output equals the per-row str kernels
+    (tests/scoring_reference.py) exactly, over NULL, empty, long
+    (> MAX_CHARS) and trap-laden rows."""
+    from multi_task_offensive_language_detection_spark.operators.scoring import (
+        LexiconSignals,
+        _normalize_batch,
+    )
+    from tests import scoring_reference as ref
+
+    langid, lm = models
+    lex = LexiconSignals()
+    norm = [ref.normalize_ref(t) for t in texts]
+    batch = _normalize_batch(pd.Series(texts, dtype=object))
+    assert _rows(batch) == [t.lower() for t in norm]
+    got, want = langid.score_batch(batch), ref.langid_ref(langid, norm)
+    assert list(got["lang"]) == list(want["lang"])
+    np.testing.assert_array_equal(got["conf"].to_numpy(), want["conf"].to_numpy())
+    ppl, n_tok, rep, stream = lm.ppl_stats_batch(batch, return_stream=True)
+    for g, w in zip((ppl, n_tok, rep), ref.lm_ref(lm, norm), strict=True):
+        np.testing.assert_array_equal(g, w)
+    for g, w in zip(lex.score_stream(len(batch), *stream), ref.signals_ref(lex, norm), strict=True):
+        np.testing.assert_array_equal(g, w)
+
+
+def test_space_table_is_str_isspace():
+    """str.split()'s separators all lie below the table's last slot."""
+    import sys
+
+    from multi_task_offensive_language_detection_spark.functions.hashing import _SPACE
+
+    spaces = [c for c in range(sys.maxunicode + 1) if chr(c).isspace()]
+    assert max(spaces) < len(_SPACE) - 1
+    assert np.flatnonzero(_SPACE).tolist() == spaces
+
+
+def test_load_models_freezes_gc(artifacts):
+    """The models and everything loaded before them move to the
+    permanent generation, so the worker's per-task gc.collect() skips
+    them."""
+    import gc
+
+    from multi_task_offensive_language_detection_spark.operators.scoring import _load_models
+
+    _load_models.cache_clear()
+    gc.unfreeze()
+    try:
+        _load_models(artifacts["langid"], artifacts["lm"])
+        assert gc.get_freeze_count() > 0
+    finally:
+        _load_models.cache_clear()
+        gc.unfreeze()

@@ -92,3 +92,43 @@ def test_phone_contiguous_ten_digits_scrubbed(spark):
     assert out[1] == "call <PHONE> now"
     assert "12345678901" in out[2]
     assert "123456789" in out[3]
+
+
+_PII_PIECES = st.one_of(
+    st.sampled_from(["@", "www.", "WwW.", "HTTP", "http://", "Https://", ".", "-", " ", "(", ")", "+1 "]),
+    st.text(alphabet="0123456789", min_size=1, max_size=11),
+    st.text(alphabet="abcxyzABCXYZ_", min_size=1, max_size=6),
+)
+
+
+@given(st.lists(st.lists(_PII_PIECES, max_size=12).map("".join), min_size=1, max_size=40))
+@settings(max_examples=25, deadline=None)
+def test_scrub_guards_match_unguarded_chain(spark, texts):
+    """scrub_pii's outer guard and per-pattern guards only skip rows a
+    pattern cannot match: its output equals the plain regexp_replace
+    chain on strings built from digits, '@', 'www.', 'HTTP' and letters."""
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)] + [(-1, None)], "i long, t string")
+    plain = F.col("t")
+    for pat, repl in PII_CHAIN:
+        plain = F.regexp_replace(plain, pat, repl)
+    rows = df.select("i", scrub_pii(F.col("t")).alias("got"), plain.alias("want")).collect()
+    bad = [(r["i"], r["got"], r["want"]) for r in rows if r["got"] != r["want"]]
+    assert not bad, bad[:3]
+
+
+def test_scrub_stays_in_whole_stage_codegen(spark):
+    """The guarded chain compiles to one WholeStageCodegen method below
+    the huge-method limit, above which Spark would run the stage
+    interpreted."""
+    df = spark.createDataFrame([("a@b.com 555-123-4567",)], "t string")
+    out = df.repartition(2, "t").select(scrub_pii(F.col("t")).alias("p"))
+    assert out.collect()[0]["p"] == "<EMAIL> <PHONE>"  # an adaptive plan codegens on execution
+    debug = getattr(spark._jvm.org.apache.spark.sql.execution.debug, "package$").__getattr__("MODULE$")
+    subtrees = debug.codegenStringSeq(out._jdf.queryExecution().executedPlan())
+    sizes = {
+        subtrees.apply(i)._1().split("\n")[0]: subtrees.apply(i)._3().maxMethodCodeSize()
+        for i in range(subtrees.size())
+    }
+    scrub = [size for tree, size in sizes.items() if "regexp_replace" in tree]
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    assert len(scrub) == 1 and scrub[0] < limit, (sizes, limit)
